@@ -9,6 +9,7 @@ import graft.hybrid.Fusion
 import graft.ops.DocumentOps
 import graft.sparse.Bm25
 import graft.vector.KnnSearch
+import IndexFamily.{Bq, Ft, Hnsw, Ivf, IvfPq, IvfSq, Lsh, Mh, Pq, Sh, Sv}
 
 /** Reference-shaped client facade: the ergonomics of the
   * aiotcvectordb surface (client → database → collection →
@@ -172,20 +173,18 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
   def upsert(docs: DataFrame): Unit = {
     val meta = describe
     val live = liveIndexes(meta)
-    import live.{ftLive, lshLive, ivfLive, mhLive, shLive, pqLive, ivfPqLive,
-      ivfSqLive, hnswLive, bqLive}
-    val anyLive = live.anySeg
+    val anyLive = live.exists(_.segmented)
 
     // ALL batch-shape validation runs BEFORE anything is written: a
     // batch that cannot complete the whole upsert must fail with the
     // index artifacts, stats, ledger, and data all untouched
-    if (ftLive) require(docs.columns.contains(meta("index.ft.text_col")),
+    if (live(Ft)) require(docs.columns.contains(meta("index.ft.text_col")),
       s"upsert on a fulltext-indexed collection must carry '${meta("index.ft.text_col")}'")
-    if (mhLive) require(docs.columns.contains(meta("index.mh.text_col")),
+    if (live(Mh)) require(docs.columns.contains(meta("index.mh.text_col")),
       s"upsert on a minhash-indexed collection must carry '${meta("index.mh.text_col")}'")
-    if (shLive) require(docs.columns.contains(meta("index.sh.text_col")),
+    if (live(Sh)) require(docs.columns.contains(meta("index.sh.text_col")),
       s"upsert on a simhash-indexed collection must carry '${meta("index.sh.text_col")}'")
-    if (lshLive || pqLive || ivfPqLive || ivfSqLive || ivfLive || hnswLive)
+    if (Seq(Lsh, Pq, IvfPq, IvfSq, Ivf, Hnsw).exists(live))
       require(docs.columns.contains(vecCol),
         s"upsert on a vector-indexed collection must carry '$vecCol'")
 
@@ -238,8 +237,8 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     // pure READ, hoisted above the fail-safe region: a failure here
     // (e.g. a corrupted centroids artifact) leaves every index intact
     val ivfCenters =
-      if (ivfLive) Some(graft.vector.IvfIndex.centersFromDf(
-        catalog.read(db, GraftCollection.ivfCentroids(coll))))
+      if (live(Ivf)) Some(graft.vector.IvfIndex.centersFromDf(
+        catalog.read(db, Ivf.at(coll, "centroids"))))
       else None
 
     // Past this point writes begin. Shape validation above covers
@@ -300,10 +299,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
         else catalog.write(db, coll, withStoredEmbedding(batch))
     }
     } // failSafe
-    invalidateDerived(keepFt = ftLive, keepIvf = ivfLive, keepLsh = lshLive,
-      keepMh = mhLive, keepSh = shLive, keepPq = pqLive, keepIvfPq = ivfPqLive,
-      keepIvfSq = ivfSqLive, keepHnsw = hnswLive, keepBq = bqLive,
-      keepSv = live.svLive)
+    invalidate(keep = live)
     if (anyLive) maybeAutoCompact()
     } finally batch.unpersist()
   }
@@ -311,12 +307,12 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
   /** Run a mutation's write sequence; on ANY failure drop every derived
     * index before rethrowing. Serving a stale or half-updated index
     * silently would be worse than the rebuild cost — the same principle
-    * invalidateDerived applies to unmaintainable families, extended to
+    * invalidate applies to unmaintainable families, extended to
     * interrupted writes. */
   private def failSafe[A](writes: => A): A =
     try writes
     catch { case t: Throwable =>
-      try invalidateDerived()
+      try invalidate()
       catch { case c: Throwable => t.addSuppressed(c) }
       throw t
     }
@@ -331,147 +327,110 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
 
   // ----------------------------------------- incremental index maintenance
 
-  /** Which derived indexes exist and can be maintained across a
-    * mutation. `anySeg` = at least one segment-maintained family is
-    * live (plain IVF is maintained in the data layout instead). */
-  private case class LiveIndexes(ftLive: Boolean, lshLive: Boolean, ivfLive: Boolean,
-                                 mhLive: Boolean, shLive: Boolean, pqLive: Boolean,
-                                 ivfPqLive: Boolean, ivfSqLive: Boolean,
-                                 hnswLive: Boolean, bqLive: Boolean,
-                                 svLive: Boolean) {
-    def anySeg: Boolean =
-      ftLive || lshLive || mhLive || shLive || pqLive || ivfPqLive || ivfSqLive ||
-        hnswLive || bqLive || svLive
-  }
-
-  private def liveIndexes(meta: Map[String, String]): LiveIndexes = LiveIndexes(
-    ftLive = meta.contains("index.ft.text_col") &&
-      catalog.collectionExists(db, GraftCollection.ftPostings(coll)),
-    lshLive = meta.contains("index.lsh.nbits") &&
-      catalog.collectionExists(db, GraftCollection.lshBuckets(coll)),
-    ivfLive = meta.contains("index.ivf.nlist") &&
-      catalog.collectionExists(db, GraftCollection.ivfCentroids(coll)),
-    mhLive = meta.contains("index.mh.text_col") &&
-      catalog.collectionExists(db, GraftCollection.mhSig(coll)),
-    shLive = meta.contains("index.sh.text_col") &&
-      catalog.collectionExists(db, GraftCollection.shSig(coll)),
-    // PQ-coded families maintain too: encoding against the STORED
-    // codebooks (and stored centroids for the coarse cell) is a pure
-    // per-doc function, exactly like LSH signing
-    pqLive = meta.contains("index.pq.m") &&
-      catalog.collectionExists(db, GraftCollection.pqCodes(coll)),
-    ivfPqLive = meta.contains("index.ivfpq.nlist") &&
-      catalog.collectionExists(db, GraftCollection.ivfPqCodes(coll)),
-    ivfSqLive = meta.contains("index.ivfsq.nlist") &&
-      catalog.collectionExists(db, GraftCollection.ivfSqCodes(coll)),
-    // HNSW maintains by construction: segment graphs are independent,
-    // so a batch becomes its own new segment graph(s) — no existing
-    // graph is ever touched
-    hnswLive = meta.contains("index.hnsw.m") &&
-      catalog.collectionExists(db, GraftCollection.hnswGraph(coll)),
-    // BQ packs against the STORED thresholds — a pure per-doc
-    // projection, the cheapest maintenance of any coded family
-    bqLive = meta.contains("index.bq.dim") &&
-      catalog.collectionExists(db, GraftCollection.bqWords(coll)),
-    // stored-sparse postings are a stat-less per-doc projection too
-    svLive = meta.contains("index.sv.field") &&
-      catalog.collectionExists(db, GraftCollection.svPostings(coll)))
+  /** The derived index families that exist and can be maintained
+    * across a mutation: the presence key is set AND the liveness
+    * artifact is on disk. Coded families maintain by encoding against
+    * their STORED models (a pure per-doc function, like LSH signing);
+    * HNSW by appending independent segment graphs. */
+  private def liveIndexes(meta: Map[String, String]): Set[IndexFamily] =
+    IndexFamily.all.filter(f => meta.contains(f.presenceKey) &&
+      catalog.collectionExists(db, f.at(coll, f.primary.role))).toSet
 
   /** Append one segment per live family for `batch` (one row per id —
     * caller enforces — with the full document schema) and advance the
     * ledger. Shared by upsert and update: an update's post-image rows
     * are exactly an upsert batch as far as the indexes care. */
   private def appendLiveSegments(batch: DataFrame, meta: Map[String, String],
-                                 live: LiveIndexes): Unit = {
+                                 live: Set[IndexFamily]): Unit = {
     val seg = mutationSeg + 1
-    if (live.ftLive) appendFulltextSegment(batch, seg, meta("index.ft.text_col"))
-    if (live.lshLive) appendLshSegment(batch, seg, meta)
-    if (live.pqLive) {
-      val model = pqModelFromMeta(meta, "index.pq", GraftCollection.pqCodebooks(coll))
+    if (live(Ft)) appendFulltextSegment(batch, seg, meta("index.ft.text_col"))
+    if (live(Lsh)) appendLshSegment(batch, seg, meta)
+    if (live(Pq)) {
+      val model = pqModelFromMeta(meta, Pq)
       // encode in the index's GATE SPACE (unit-normalized for a
       // cosine-built family — the r13 metric contract): a raw-space
       // code appended to a normalized-space artifact would carry a
       // meaningless resid and silently break the certificate
       val (keyed, kid) = indexKeyed(gateSpace(
-        batch.where(col(vecCol).isNotNull), quantMetric(meta, "index.pq")))
-      appendSegRows(GraftCollection.pqCodes(coll), seg,
+        batch.where(col(vecCol).isNotNull), quantMetric(meta, Pq)))
+      appendSegRows(Pq.at(coll, "codes"), seg,
         graft.vector.PqIndex.encode(model, keyed, kid, vecCol))
     }
-    if (live.ivfPqLive) {
-      val pq = pqModelFromMeta(meta, "index.ivfpq", GraftCollection.ivfPqCodebooks(coll))
+    if (live(IvfPq)) {
+      val pq = pqModelFromMeta(meta, IvfPq)
       val centers = graft.vector.IvfIndex.centersFromDf(
-        catalog.read(db, GraftCollection.ivfPqCentroids(coll)))
+        catalog.read(db, IvfPq.at(coll, "centroids")))
       val (vecs, kid) = indexKeyed(gateSpace(
-        batch.where(col(vecCol).isNotNull), quantMetric(meta, "index.ivfpq")))
+        batch.where(col(vecCol).isNotNull), quantMetric(meta, IvfPq)))
       val cells = vecs.select(col(kid).cast("long").as("id"),
         graft.vector.IvfIndex.assignExpr(centers, col(vecCol)).as("cell"))
-      appendSegRows(GraftCollection.ivfPqCodes(coll), seg,
+      appendSegRows(IvfPq.at(coll, "codes"), seg,
         graft.vector.PqIndex.encode(pq, vecs, kid, vecCol).join(cells, "id"),
         subPartition = Seq("cell"))
       // the batch's per-cell ball radii — same rho-expansion contract
       // as the IVF_SQ8 append (an appended outlier must widen its
       // cell's certificate or the radius route would drop it)
-      if (catalog.collectionExists(db, GraftCollection.ivfPqStats(coll)))
-        appendSegRows(GraftCollection.ivfPqStats(coll), seg,
+      if (catalog.collectionExists(db, IvfPq.at(coll, "stats")))
+        appendSegRows(IvfPq.at(coll, "stats"), seg,
           graft.vector.IvfIndex.cellStats(
             centers.map { case (c, i) => (c.toArray, i) }, vecs, vecCol))
     }
-    if (live.ivfSqLive) {
+    if (live(IvfSq)) {
       // SQ8 codes against the STORED bounds + coarse centroids — a pure
       // per-doc projection like the PQ families (bounds are NOT
       // retrained: out-of-range batch values clamp, as in any SQ index)
       val sq = sqModelFromMeta(meta)
       val centers = graft.vector.IvfIndex.centersFromDf(
-          catalog.read(db, GraftCollection.ivfSqCentroids(coll)))
+          catalog.read(db, IvfSq.at(coll, "centroids")))
         .map { case (c, i) => (c.toArray, i) }
       // gate-space batch (the pq arm's rationale) — also true for the
       // certificate SIDECAR, whose codes this same arm maintains
       val (keyed, kid) = indexKeyed(gateSpace(
-        batch.where(col(vecCol).isNotNull), quantMetric(meta, "index.ivfsq")))
-      appendSegRows(GraftCollection.ivfSqCodes(coll), seg,
+        batch.where(col(vecCol).isNotNull), quantMetric(meta, IvfSq)))
+      appendSegRows(IvfSq.at(coll, "codes"), seg,
         graft.vector.IvfSq.encodeAssigned(centers, sq, keyed, kid, vecCol),
         subPartition = Seq("cell"))
       // the batch's own per-cell ball radii: an appended row can lie
       // farther from its centroid than the base rho — without this row
       // the radius route's cell certificate would silently understate
       // a cell and drop a true ball member
-      if (catalog.collectionExists(db, GraftCollection.ivfSqStats(coll)))
-        appendSegRows(GraftCollection.ivfSqStats(coll), seg,
+      if (catalog.collectionExists(db, IvfSq.at(coll, "stats")))
+        appendSegRows(IvfSq.at(coll, "stats"), seg,
           graft.vector.IvfSq.cellStats(centers, keyed, vecCol))
     }
     // dedup signatures are per-doc pure functions of the text — the
     // batch's signatures are a self-contained new segment
-    if (live.mhLive) {
+    if (live(Mh)) {
       val sig = graft.dedup.Dedup.minhashSignatures(batch, idCol,
           meta("index.mh.text_col"), meta("index.mh.shingle").toInt,
           meta("index.mh.perms").toInt, meta("index.mh.seed").toLong)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        appendSegRows(GraftCollection.mhSig(coll), seg, sig)
+        appendSegRows(Mh.at(coll, "sig"), seg, sig)
         // keep the joinable band-bucket form in lockstep (one O(batch)
         // projection; the table may predate the bucket artifact)
-        if (catalog.collectionExists(db, GraftCollection.mhBkt(coll)))
-          appendSegRows(GraftCollection.mhBkt(coll), seg,
+        if (catalog.collectionExists(db, Mh.at(coll, "bkt")))
+          appendSegRows(Mh.at(coll, "bkt"), seg,
             graft.dedup.Dedup.minhashBandBuckets(sig,
                 meta("index.mh.perms").toInt,
                 meta.getOrElse("index.mh.bands", "8").toInt)
               .sortWithinPartitions("h"))
       } finally sig.unpersist()
     }
-    if (live.shLive) appendSegRows(GraftCollection.shSig(coll), seg,
+    if (live(Sh)) appendSegRows(Sh.at(coll, "sig"), seg,
       graft.dedup.Dedup.simhashSignatures(batch, idCol, meta("index.sh.text_col")))
-    if (live.bqLive) {
+    if (live(Bq)) {
       val model = bqModelFromMeta(meta)
       val (keyed, kid) = indexKeyed(batch.where(col(vecCol).isNotNull))
-      appendSegRows(GraftCollection.bqWords(coll), seg,
+      appendSegRows(Bq.at(coll, "words"), seg,
         graft.vector.BqIndex.encode(model, keyed, kid, vecCol))
     }
-    if (live.svLive)
-      appendSegRows(GraftCollection.svPostings(coll), seg,
+    if (live(Sv))
+      appendSegRows(Sv.at(coll, "postings"), seg,
         graft.sparse.SparseSearch.sparsePostings(batch, idCol,
             meta("index.sv.field"))
           .sortWithinPartitions("term"))
-    if (live.hnswLive) appendHnswSegment(batch, meta)
+    if (live(Hnsw)) appendHnswSegment(batch, meta)
     advanceLedger(batch, seg)
   }
 
@@ -507,7 +466,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
 
   private def hnswStore: HnswStore =
     HnswStore(catalog, db, metaColl = coll,
-      graphColl = GraftCollection.hnswGraph(coll))
+      graphColl = Hnsw.at(coll, "graph"))
 
   /** Monotone mutation counter; each indexed mutation claims the next
     * segment number. */
@@ -610,7 +569,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
       raw.groupBy("doc_id").agg(first(col("dl")).as("dl"))
         .agg(org.apache.spark.sql.functions.count(lit(1)).as(n),
           coalesce(sum(col("dl")), lit(0L)).as(dl))
-    val oldStats = catalog.read(db, GraftCollection.ftTerms(coll))
+    val oldStats = catalog.read(db, Ft.at(coll, "terms"))
     val oldCorpus = oldStats.agg(
       coalesce(max(col("n_docs")), lit(0L)).as("__on"),
       coalesce(max(col("sum_dl")), lit(0L)).as("__od"))
@@ -638,12 +597,12 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
 
     // order matters: the stats plan reads the OLD collection (decRaw),
     // so it must land before the collection data is overwritten
-    ptime("ft stats rewrite")(catalog.overwriteFromSelf(db, GraftCollection.ftTerms(coll), newTerms))
+    ptime("ft stats rewrite")(catalog.overwriteFromSelf(db, Ft.at(coll, "terms"), newTerms))
     // hash-cluster + in-partition sort (not repartitionByRange: that
     // costs an extra boundary-sampling pass) — each segment file is
     // term-sorted, so rowgroup min/max stats stay tight for In(term)
     // pruning
-    if (add) ptime("ft seg write")(catalog.overwritePartitions(db, GraftCollection.ftPostings(coll),
+    if (add) ptime("ft seg write")(catalog.overwritePartitions(db, Ft.at(coll, "postings"),
       incRaw.repartition(col("term")).sortWithinPartitions("term")
         .withColumn(GraftCollection.SegCol, lit(seg)),
       GraftCollection.SegCol))
@@ -660,7 +619,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
       docs.where(col(vecCol).isNotNull), idCol, vecCol,
       meta("index.lsh.nbits").toInt, meta("index.lsh.bands").toInt,
       meta("index.lsh.dim").toInt, meta("index.lsh.seed").toLong)
-    catalog.overwritePartitions(db, GraftCollection.lshBuckets(coll),
+    catalog.overwritePartitions(db, Lsh.at(coll, "buckets"),
       batch.withColumn(GraftCollection.SegCol, lit(seg)), GraftCollection.SegCol)
   }
 
@@ -678,13 +637,13 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * rows are re-assigned against the STORED centroids (a projection —
     * the snapshot rewrite is what the mutation costs anyway), so
     * `search(nprobe)` keeps pruning after updates and deletes too.
-    * Returns whether the IVF layout was kept (the caller's keepIvf). */
+    * Returns whether the IVF layout was kept. */
   private def persistSnapshotKeepingCell(snapshot: DataFrame, ivfLive: Boolean): Boolean = {
     if (!ivfLive || !snapshot.columns.contains(vecCol)) {
       persistSnapshot(snapshot); false
     } else {
       val centers = graft.vector.IvfIndex.centersFromDf(
-        catalog.read(db, GraftCollection.ivfCentroids(coll)))
+        catalog.read(db, Ivf.at(coll, "centroids")))
       val assigned = snapshot.withColumn(GraftCollection.CellCol,
         graft.vector.IvfIndex.assignExpr(centers, col(vecCol)))
       if (numBuckets.isEmpty)
@@ -772,7 +731,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     require(ef.isEmpty || nprobe.isEmpty,
       "ef tunes the HNSW graph; nprobe belongs to the IVF path")
     if (ef.isDefined) {
-      require(describe.contains("index.hnsw.m"),
+      require(describe.contains(Hnsw.presenceKey),
         "search ef param requires a live HNSW index: run rebuildHnswIndex first")
       val hits =
         if (radius.isDefined)
@@ -795,12 +754,12 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     val raw = catalog.read(db, coll)
     val hits = (nprobe, radius) match {
       case (Some(np), Some(r)) if raw.columns.contains(GraftCollection.CellCol) &&
-          catalog.collectionExists(db, GraftCollection.ivfCentroids(coll)) =>
+          catalog.collectionExists(db, Ivf.at(coll, "centroids")) =>
         // radius WITH the IVF index's nprobe: served from the cell
         // layout with adaptive probe escalation (full probe = exact)
         searchIvfRadius(queries, qIdCol, qVecCol, r, limit, np, filter)
       case (Some(np), None) if raw.columns.contains(GraftCollection.CellCol) &&
-          catalog.collectionExists(db, GraftCollection.ivfCentroids(coll)) =>
+          catalog.collectionExists(db, Ivf.at(coll, "centroids")) =>
         val base = pred.fold(raw)(raw.where)
         val assigned = base.select(KnnSearch.idNorm(base, idCol).as("id"),
           col(vecCol).as("__vec"), col(GraftCollection.CellCol).as("cell"))
@@ -812,7 +771,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
         // lives only on the FLAT paths, explicit overrides on
         // searchIvfFiltered/searchIvfRadius)
         graft.vector.IvfIndex.searchAssigned(assigned,
-          catalog.read(db, GraftCollection.ivfCentroids(coll)),
+          catalog.read(db, Ivf.at(coll, "centroids")),
           queries, qIdCol, qVecCol,
           // fallback "l2" = rebuildIndex's default, matching
           // ivfServing's fallback — a meta-less legacy artifact must
@@ -856,51 +815,25 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * certificate artifact set is live AND its stored metric equals the
     * query's (`None` ⇒ the caller falls back to FLAT rather than
     * hitting a route's actionable-rebuild require — routing must never
-    * turn a valid FLAT query into an error). Eligibility is defined
-    * ONCE per family in the *RadiusReady predicates below (ADVICE r12:
-    * a route growing a new required artifact must extend its predicate
-    * in the same change, or the router would route into that route's
-    * require instead of falling back). */
+    * turn a valid FLAT query into an error). Eligibility runs the SAME
+    * guards as the routes' requires ([[codedGap]]), so a route growing
+    * a new required artifact cannot be routed into its own require. */
   private def certificateRadiusRoute(queries: DataFrame, qIdCol: String,
       qVecCol: String, radius: Double, limit: Int,
       filter: String, metric: String): Option[DataFrame] = {
     val meta = describe
-    if (ivfSqRadiusReady(meta, metric))
-      Some(searchIvfSqRadius(queries, qIdCol, qVecCol, radius, limit, filter))
-    else if (ivfPqRadiusReady(meta, metric))
-      Some(searchIvfPqRadius(queries, qIdCol, qVecCol, radius, limit, filter))
-    else if (pqRadiusReady(meta, metric))
-      Some(searchPqRadius(queries, qIdCol, qVecCol, radius, limit, filter))
-    else None
+    Seq(IvfSq, IvfPq, Pq).find { f =>
+      val codes = f.at(coll, f.primary.role)
+      quantMetric(meta, f) == metric && codedGap(f, meta, certified = true,
+        radius = true, codes =
+          if (catalog.collectionExists(db, codes)) catalog.read(db, codes)
+          else spark.emptyDataFrame).isEmpty
+    }.map {
+      case IvfSq => searchIvfSqRadius(queries, qIdCol, qVecCol, radius, limit, filter)
+      case IvfPq => searchIvfPqRadius(queries, qIdCol, qVecCol, radius, limit, filter)
+      case _ => searchPqRadius(queries, qIdCol, qVecCol, radius, limit, filter)
+    }
   }
-
-  /** A coded artifact carries the per-row certificate column. */
-  private def residCodes(name: String): Boolean =
-    catalog.collectionExists(db, name) &&
-      catalog.read(db, name).columns.contains("resid")
-
-  // Per-family radius-serving eligibility — the ONE definition each
-  // router check and its route's artifact contract share (ADVICE r12).
-  // Each predicate = "the route's requires all pass AND the stored
-  // metric matches": searchIvfSqRadius needs meta + stats + resid
-  // codes, etc. Extend the predicate in the SAME change as any new
-  // require in the route.
-  private def ivfSqRadiusReady(meta: Map[String, String], metric: String): Boolean =
-    meta.contains("index.ivfsq.nlist") &&
-      quantMetric(meta, "index.ivfsq") == metric &&
-      catalog.collectionExists(db, GraftCollection.ivfSqStats(coll)) &&
-      residCodes(GraftCollection.ivfSqCodes(coll))
-
-  private def ivfPqRadiusReady(meta: Map[String, String], metric: String): Boolean =
-    meta.contains("index.ivfpq.nlist") &&
-      quantMetric(meta, "index.ivfpq") == metric &&
-      catalog.collectionExists(db, GraftCollection.ivfPqStats(coll)) &&
-      residCodes(GraftCollection.ivfPqCodes(coll))
-
-  private def pqRadiusReady(meta: Map[String, String], metric: String): Boolean =
-    meta.contains("index.pq.m") &&
-      quantMetric(meta, "index.pq") == metric &&
-      residCodes(GraftCollection.pqCodes(coll))
 
   /** Grouped search — top `limit` GROUPS per query (ranked by best
     * member), `groupSize` members each ([[graft.vector.GroupedSearch]]
@@ -964,7 +897,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
                     poolMult: Int = 4, ef: Int = 10,
                     filter: String = ""): DataFrame = {
     val meta = describe
-    require(meta.contains("index.hnsw.m"),
+    require(meta.contains(Hnsw.presenceKey),
       "no HNSW index: run rebuildHnswIndex first")
     // the exact arm's parameter contract, verbatim — the ANN arm calls
     // greedySelect directly and must not accept what searchMmr rejects
@@ -1060,7 +993,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
                         groupBy: String, limit: Int = 10, groupSize: Int = 3,
                         ef: Int = 10, filter: String = ""): DataFrame = {
     val meta = describe
-    require(meta.contains("index.hnsw.m"),
+    require(meta.contains(Hnsw.presenceKey),
       "no HNSW index: run rebuildHnswIndex first")
     require(df.columns.contains(groupBy), s"no such field: $groupBy")
     require(limit > 0 && groupSize > 0,
@@ -1251,7 +1184,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
       .withColumnRenamed("vec", GraftCollection.EmbedCol)
     failSafe {
       persistSnapshotKeepingCell(snap.join(emb, Seq(idCol), "left"),
-        liveIndexes(describe).ivfLive)
+        liveIndexes(describe)(Ivf))
     }
     catalog.updateMeta(db, coll, Map("embedding.model" -> "word2vec",
       "embedding.text_field" -> tc, "embedding.dim" -> d.toString))
@@ -1363,7 +1296,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * type switch can never leave one family's probe tables pointing at
     * another family's assignments. */
   private def beginVectorRebuild(what: String): Int = {
-    invalidateVectorIndex()
+    invalidate(keep = IndexFamily.textual)
     require(df.where(col(vecCol).isNull).isEmpty,
       s"cannot build $what: collection contains null vectors")
     graft.vector.LshIndex.deriveDimOpt(df, vecCol)
@@ -1472,24 +1405,24 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
         .orderBy("query_id", "rank")
     }
 
-  /** Reconstruct a PQ model from the persisted codebooks using the
-    * given meta prefix ("index.pq" or "index.ivfpq"). */
-  private def pqModelFromMeta(meta: Map[String, String], prefix: String,
-                              codebookColl: String): graft.vector.PqIndex.Model =
-    graft.vector.PqIndex.modelFromDf(catalog.read(db, codebookColl),
-      meta(s"$prefix.m").toInt, meta(s"$prefix.k").toInt, meta(s"$prefix.dim").toInt)
+  /** Reconstruct a PQ model from the persisted codebooks of `f` (PQ or
+    * IVF_PQ). */
+  private def pqModelFromMeta(meta: Map[String, String],
+                              f: IndexFamily): graft.vector.PqIndex.Model =
+    graft.vector.PqIndex.modelFromDf(catalog.read(db, f.at(coll, "codebooks")),
+      meta(f.prefix + "m").toInt, meta(f.prefix + "k").toInt, meta(f.prefix + "dim").toInt)
 
   /** Reconstruct the SQ8 quantizer from the persisted per-dim bounds. */
   private def sqModelFromMeta(meta: Map[String, String]): graft.vector.SqIndex.Model =
     graft.vector.SqIndex.modelFromDf(
-      catalog.read(db, GraftCollection.ivfSqBounds(coll)),
+      catalog.read(db, IvfSq.at(coll, "bounds")),
       meta("index.ivfsq.dim").toInt)
 
   /** Reconstruct the BQ quantizer from the persisted per-dim
     * thresholds. */
   private def bqModelFromMeta(meta: Map[String, String]): graft.vector.BqIndex.Model =
     graft.vector.BqIndex.modelFromDf(
-      catalog.read(db, GraftCollection.bqThresholds(coll)),
+      catalog.read(db, Bq.at(coll, "thresholds")),
       meta("index.bq.dim").toInt)
 
   // ------------------------------------- quantized-family metric support
@@ -1508,8 +1441,8 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
   // are l2 (the only metric they could have been built for).
 
   /** The metric a quantized family's stored artifacts live in. */
-  private def quantMetric(meta: Map[String, String], prefix: String): String =
-    meta.getOrElse(s"$prefix.metric", "l2")
+  private def quantMetric(meta: Map[String, String], f: IndexFamily): String =
+    meta.getOrElse(f.prefix + "metric", f.defaultMetric)
 
   private def requireQuantMetric(family: String, metric: String): Unit =
     require(metric == "l2" || metric == "cosine",
@@ -1547,6 +1480,92 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
         graft.vector.Ranked.Rerank("cosine", qarr, radius))
     else (qarr, radius.getOrElse(0.0), null)
 
+  // --------------------------------------------- coded-route prologue
+  //
+  // Every PQ / IVF_PQ / IVF_SQ8 / BQ route is [[servedCoded]] plus one
+  // graft.vector kernel call.
+
+  /** The guard a coded route fails before serving, if any — the ONE
+    * definition the routes' requires and the radius router's
+    * eligibility share, so a route cannot grow a required artifact its
+    * router does not check. `certified` routes close with a
+    * certificate that needs the per-row `resid`; `radius` routes of
+    * the cell families also prune with the per-cell ball stats. */
+  private def codedGap(f: IndexFamily, meta: Map[String, String],
+                       certified: Boolean, radius: Boolean,
+                       codes: => DataFrame): Option[String] = {
+    val serving = if (radius) "radius" else "exact"
+    if (!meta.contains(f.presenceKey)) Some(s"no ${f.name} index: run ${f.rebuild} first")
+    else if (radius && f.has("stats") && !catalog.collectionExists(db, f.at(coll, "stats")))
+      Some(s"${f.name} index predates radius serving (no cell stats): rerun ${f.rebuild}")
+    else if (certified && !codes.columns.contains("resid"))
+      Some(s"${f.name} index predates $serving serving (no per-row resid): rerun ${f.rebuild}")
+    else None
+  }
+
+  /** What a coded route serves from once [[servedCoded]] ran; models,
+    * centroids and cell stats load on first use. */
+  private final class Coded(f: IndexFamily, meta: Map[String, String],
+                            val codes: DataFrame, val snapshot: DataFrame,
+                            val qarr: Array[(Long, Array[Double])],
+                            radius: Option[Double]) {
+    /** The family's stored metric. */
+    val metric: String = quantMetric(meta, f)
+    /** Gate-space queries and radius plus the metric-space rerank. */
+    lazy val (gq, gr, rr) = gateQueries(metric, qarr, radius)
+    lazy val centers: Seq[(Array[Double], Int)] =
+      catalog.read(db, f.at(coll, "centroids"))
+        .select(col("centroid"), col("cell")).collect()
+        .map(r => (r.getSeq[Double](0).toArray, r.getInt(1))).toSeq
+    lazy val cellRho: Map[Int, Double] =
+      graft.vector.IvfIndex.collectCellRho(catalog.read(db, f.at(coll, "stats")))
+    lazy val pq: graft.vector.PqIndex.Model = pqModelFromMeta(meta, f)
+    lazy val sq: graft.vector.SqIndex.Model = sqModelFromMeta(meta)
+    lazy val bq: graft.vector.BqIndex.Model = bqModelFromMeta(meta)
+
+    /** nprobe = 0 (the default) is the DOCUMENTED sentinel for the
+      * CALIBRATED probe count persisted at rebuild (row 127's
+      * recall-floor contract on the cell axis — a fixed default
+      * degrades silently as auto-√N nlist grows); explicit positive
+      * nprobe is the caller's override, legacy indexes without the key
+      * serve the historical 4, and negatives are rejected rather than
+      * silently aliased onto the sentinel (the nlist ≤ 0 convention). */
+    def probes(nprobe: Int): Int = {
+      require(nprobe >= 0, s"nprobe=$nprobe (0 = the calibrated default)")
+      if (nprobe > 0) nprobe
+      else meta.get(f.prefix + "nprobe_default").map(_.toInt).getOrElse(4)
+    }
+  }
+
+  /** The prologue of every coded route: the [[codedGap]] guard, the
+    * live codes at the family's base segment (string PKs mask through
+    * the surrogate), an optional `filter` SEMI-JOINED onto the codes
+    * before any scan — a scan structure pre-filters where a graph must
+    * post-filter its beam, and the same filtered snapshot feeds the
+    * exact rerank, so results are exact among eligible rows at any
+    * selectivity — and the collected query batch. `serve` is the
+    * route's kernel call; string query ids are restored on its result. */
+  private def servedCoded(f: IndexFamily, queries: DataFrame, qIdCol: String,
+                          qVecCol: String, filter: String = "",
+                          radius: Option[Double] = None,
+                          certified: Boolean = false)
+                         (serve: Coded => DataFrame): DataFrame = {
+    val meta = describe
+    lazy val raw = catalog.read(db, f.at(coll, f.primary.role))
+    val gap = codedGap(f, meta, certified || radius.isDefined, radius.isDefined, raw)
+    require(gap.isEmpty, gap.get)
+    val Fold.Rows(rowId, surrogate, _, _) = f.primary.fold
+    val live = liveSegRows(raw, rowId,
+      meta.get(f.baseSegKey).map(_.toInt).getOrElse(0), surrogate)
+    val filtered = if (filter.isEmpty) None
+                   else Some(df.where(FilterParser.parse(filter)))
+    val codes = filtered.fold(live)(d =>
+      live.join(d.select(nodeKey.as(rowId)), Seq(rowId), "left_semi"))
+    val (qarr, remap) = collectQueries(queries, qIdCol, qVecCol)
+    remapQueryIds(serve(new Coded(f, meta, codes, filtered.getOrElse(df), qarr, radius)),
+      remap)
+  }
+
   /** `nlist ≤ 0` (the default) derives the cell count from the corpus
     * at rebuild time: ⌈√N⌉ cells, the standard IVF sizing rule — with
     * √N cells a probe scans ~√N rows, balancing the centroid scan
@@ -1578,8 +1597,8 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     }
     // persist the model (centroids) so later sessions serve nprobe
     // searches from the stored layout without retraining
-    catalog.createCollectionIfNotExists(db, GraftCollection.ivfCentroids(coll))
-    catalog.write(db, GraftCollection.ivfCentroids(coll),
+    catalog.createCollectionIfNotExists(db, Ivf.at(coll, "centroids"))
+    catalog.write(db, Ivf.at(coll, "centroids"),
       graft.vector.IvfIndex.centroids(model, spark))
     catalog.updateMeta(db, coll,
       Map("index.ivf.nlist" -> nl.toString, "index.ivf.metric" -> metric))
@@ -1605,16 +1624,15 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     val model = graft.vector.PqIndex.train(base, vecCol, dim, m, k)
     val (keyed, kid) = indexKeyed(base)
     val codes = graft.vector.PqIndex.encode(model, keyed, kid, vecCol)
-    catalog.createCollectionIfNotExists(db, GraftCollection.pqCodes(coll))
-    catalog.createCollectionIfNotExists(db, GraftCollection.pqCodebooks(coll))
-    catalog.write(db, GraftCollection.pqCodes(coll),
+    Pq.collections(coll).foreach(catalog.createCollectionIfNotExists(db, _))
+    catalog.write(db, Pq.at(coll, "codes"),
       codes.withColumn(GraftCollection.SegCol, lit(baseSeg)),
       partitionBy = Seq(GraftCollection.SegCol))
-    catalog.write(db, GraftCollection.pqCodebooks(coll),
+    catalog.write(db, Pq.at(coll, "codebooks"),
       graft.vector.PqIndex.codebooksDf(model, spark))
     catalog.updateMeta(db, coll, Map(
       "index.pq.m" -> m.toString, "index.pq.k" -> k.toString,
-      "index.pq.dim" -> dim.toString, "index.pq.base_seg" -> baseSeg.toString,
+      "index.pq.dim" -> dim.toString, Pq.baseSegKey -> baseSeg.toString,
       "index.pq.metric" -> metric))
   }
 
@@ -1634,53 +1652,33 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     val baseSeg = mutationSeg
     val model = graft.vector.BqIndex.train(df, vecCol)
     val (keyed, kid) = indexKeyed(df)
-    catalog.createCollectionIfNotExists(db, GraftCollection.bqWords(coll))
-    catalog.createCollectionIfNotExists(db, GraftCollection.bqThresholds(coll))
-    catalog.write(db, GraftCollection.bqWords(coll),
+    Bq.collections(coll).foreach(catalog.createCollectionIfNotExists(db, _))
+    catalog.write(db, Bq.at(coll, "words"),
       graft.vector.BqIndex.encode(model, keyed, kid, vecCol)
         .withColumn(GraftCollection.SegCol, lit(baseSeg)),
       partitionBy = Seq(GraftCollection.SegCol))
-    catalog.write(db, GraftCollection.bqThresholds(coll),
+    catalog.write(db, Bq.at(coll, "thresholds"),
       graft.vector.BqIndex.thresholdsDf(model, spark))
     catalog.updateMeta(db, coll, Map(
       "index.bq.dim" -> dim.toString, "index.bq.metric" -> metric,
-      "index.bq.base_seg" -> baseSeg.toString))
+      Bq.baseSegKey -> baseSeg.toString))
   }
 
   /** BQ search served from the persisted packed words: Hamming
     * shortlist of `limit * candMult`, exact rerank in the collection's
     * stored BQ metric. */
   def searchBq(queries: DataFrame, qIdCol: String, qVecCol: String,
-               limit: Int = 10, candMult: Int = 10): DataFrame = {
-    val meta = describe
-    require(meta.contains("index.bq.dim"), "no BQ index: run rebuildBqIndex first")
-    val model = bqModelFromMeta(meta)
-    val words = liveSegRows(catalog.read(db, GraftCollection.bqWords(coll)),
-      "id", meta.get("index.bq.base_seg").map(_.toInt).getOrElse(0),
-      surrogate = true)
-    val (qarr, remap) = collectQueries(queries, qIdCol, qVecCol)
-    remapQueryIds(
-      graft.vector.BqIndex.searchRerank(model, words,
-        df, idCol, vecCol, qarr, limit, candMult,
-        metric = meta.getOrElse("index.bq.metric", "cosine"),
-        nodeKey = nodeKeyOpt),
-      remap)
-  }
+               limit: Int = 10, candMult: Int = 10): DataFrame =
+    bqRerank(queries, qIdCol, qVecCol, "", limit, candMult)
 
-  /** The live BQ code table, optionally narrowed to filter-passing
-    * documents: the scalar predicate evaluates on the data snapshot
-    * and SEMI-JOINS the codes down before any scan — a scan structure
-    * pre-filters where a graph must post-filter its beam (string-PK
-    * collections map through the xxhash64 surrogate, the code tables'
-    * key). */
-  private def bqEligible(meta: Map[String, String],
-                         filtered: Option[DataFrame]): DataFrame = {
-    val words = liveSegRows(catalog.read(db, GraftCollection.bqWords(coll)),
-      "id", meta.get("index.bq.base_seg").map(_.toInt).getOrElse(0),
-      surrogate = true)
-    filtered.fold(words)(f =>
-      words.join(f.select(nodeKey.as("id")), Seq("id"), "left_semi"))
-  }
+  /** Hamming shortlist over the (optionally pre-filtered) live codes,
+    * exact rerank in the stored BQ metric against the same snapshot. */
+  private def bqRerank(queries: DataFrame, qIdCol: String, qVecCol: String,
+                       filter: String, limit: Int, candMult: Int): DataFrame =
+    servedCoded(Bq, queries, qIdCol, qVecCol, filter) { c =>
+      graft.vector.BqIndex.searchRerank(c.bq, c.codes, c.snapshot, idCol, vecCol,
+        c.qarr, limit, candMult, metric = c.metric, nodeKey = nodeKeyOpt)
+    }
 
   /** Radius search on the live BQ index — `radius` is the index's OWN
     * integer Hamming distance (≤ radius bit flips), so the gate and
@@ -1697,20 +1695,13 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
   def searchBqRadius(queries: DataFrame, qIdCol: String, qVecCol: String,
                      radius: Int, limit: Int = 10,
                      filter: String = ""): DataFrame = {
-    val meta = describe
-    require(meta.contains("index.bq.dim"), "no BQ index: run rebuildBqIndex first")
     require(radius >= 0, s"negative Hamming radius $radius")
-    val (qarr, remap) = collectQueries(queries, qIdCol, qVecCol)
-    val filtered = if (filter.isEmpty) None
-                   else Some(df.where(FilterParser.parse(filter)))
     // string-PK collections: codes key by the xxhash64 surrogate —
-    // restoreStringIds resolves back to the real document id (review
-    // finding: this is the shared code-only-result device, not a
-    // hand-rolled copy)
-    remapQueryIds(restoreStringIds(
-      graft.vector.BqIndex.searchRadius(bqModelFromMeta(meta),
-        bqEligible(meta, filtered), qarr, radius, limit)),
-      remap)
+    // restoreStringIds resolves back to the real document id
+    servedCoded(Bq, queries, qIdCol, qVecCol, filter) { c =>
+      restoreStringIds(graft.vector.BqIndex.searchRadius(c.bq, c.codes, c.qarr,
+        radius, limit))
+    }
   }
 
   /** Filtered BQ search: Hamming shortlist over the PRE-filtered
@@ -1724,18 +1715,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
                        candMult: Int = 10): DataFrame = {
     require(filter.nonEmpty,
       "searchBqFiltered requires a filter — use searchBq for unfiltered search")
-    val meta = describe
-    require(meta.contains("index.bq.dim"), "no BQ index: run rebuildBqIndex first")
-    // ONE filter scan: the same filtered frame feeds the code
-    // semi-join and the exact rerank (review finding)
-    val filtered = df.where(FilterParser.parse(filter))
-    val (qarr, remap) = collectQueries(queries, qIdCol, qVecCol)
-    remapQueryIds(
-      graft.vector.BqIndex.searchRerank(bqModelFromMeta(meta),
-        bqEligible(meta, Some(filtered)), filtered, idCol, vecCol, qarr, limit,
-        candMult, metric = meta.getOrElse("index.bq.metric", "cosine"),
-        nodeKey = nodeKeyOpt),
-      remap)
+    bqRerank(queries, qIdCol, qVecCol, filter, limit, candMult)
   }
 
   /** rebuild_index for HNSW — the reference's DEFAULT index type
@@ -1759,8 +1739,8 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
                        seed: Long = 42L, heuristic: Boolean = false): Unit = {
     val dim = beginVectorRebuild("HNSW")
     val (keyed, kid) = indexKeyed(df)
-    catalog.createCollectionIfNotExists(db, GraftCollection.hnswGraph(coll))
-    catalog.write(db, GraftCollection.hnswGraph(coll),
+    catalog.createCollectionIfNotExists(db, Hnsw.at(coll, "graph"))
+    catalog.write(db, Hnsw.at(coll, "graph"),
       graft.vector.HnswIndex.build(keyed, kid, vecCol, m, efConstruction,
         numSegments, seed, heuristic = heuristic),
       partitionBy = Seq("seg"))
@@ -1788,7 +1768,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
       // base_seg (mutation-seg units) feeds segmentDebt so sustained
       // ingest auto-compacts HNSW-only collections too
       "index.hnsw.nextseg" -> numSegments.toString,
-      "index.hnsw.base_seg" -> mutationSeg.toString,
+      Hnsw.baseSegKey -> mutationSeg.toString,
       "index.hnsw.gen" -> GraftCollection.freshGen()))
   }
 
@@ -1808,7 +1788,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
                  limit: Int = 10, ef: Int = 0,
                  metric: Option[String] = None): DataFrame = {
     val meta = describe
-    require(meta.contains("index.hnsw.m"),
+    require(meta.contains(Hnsw.presenceKey),
       "no HNSW index: run rebuildHnswIndex first")
     val efServe = if (ef > 0) ef
                   else meta.get("index.hnsw.ef_default").map(_.toInt).getOrElse(10)
@@ -1855,7 +1835,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
                          adaptive: Boolean = true,
                          metric: Option[String] = None): DataFrame = {
     val meta = describe
-    require(meta.contains("index.hnsw.m"),
+    require(meta.contains(Hnsw.presenceKey),
       "no HNSW index: run rebuildHnswIndex first")
     require(filter.nonEmpty,
       "searchHnswFiltered requires a filter — use searchHnsw for unfiltered search")
@@ -2006,7 +1986,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
                        radius: Double, limit: Int = 10, ef: Int = 10,
                        filter: String = "", adaptive: Boolean = true): DataFrame = {
     val meta = describe
-    require(meta.contains("index.hnsw.m"),
+    require(meta.contains(Hnsw.presenceKey),
       "no HNSW index: run rebuildHnswIndex first")
     val m = meta("index.hnsw.metric")
     val larger = graft.vector.VectorMetric(m).largerIsBetter
@@ -2112,8 +2092,8 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
                                 cents: DataFrame)
   private def ivfServing(filter: String, metric: Option[String]): IvfServing = {
     val meta = describe
-    require(meta.contains("index.ivf.nlist") &&
-      catalog.collectionExists(db, GraftCollection.ivfCentroids(coll)),
+    require(meta.contains(Ivf.presenceKey) &&
+      catalog.collectionExists(db, Ivf.at(coll, "centroids")),
       "no IVF index: run rebuildIndex first")
     val raw = catalog.read(db, coll)
     require(raw.columns.contains(GraftCollection.CellCol),
@@ -2126,7 +2106,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
       raw, filtered,
       filtered.select(KnnSearch.idNorm(filtered, idCol).as("id"),
         col(vecCol).as("__vec"), col(GraftCollection.CellCol).as("cell")),
-      catalog.read(db, GraftCollection.ivfCentroids(coll)))
+      catalog.read(db, Ivf.at(coll, "centroids")))
   }
 
   def searchIvfFiltered(queries: DataFrame, qIdCol: String, qVecCol: String,
@@ -2285,7 +2265,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
                         qLabelCol: String, labelCol: String, k: Int = 10,
                         ef: Int = 10, adaptive: Boolean = true): DataFrame = {
     val meta = describe
-    require(meta.contains("index.hnsw.m"),
+    require(meta.contains(Hnsw.presenceKey),
       "no HNSW index: run rebuildHnswIndex first")
     require(df.columns.contains(labelCol), s"unknown label column: $labelCol")
     val m = meta("index.hnsw.metric")
@@ -2403,7 +2383,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
         if (old != null)
           try old._2.unpersist(blocking = false)
           catch { case _: Throwable => () } // stopped owning session
-        val raw = catalog.read(db, GraftCollection.hnswGraph(coll))
+        val raw = catalog.read(db, Hnsw.at(coll, "graph"))
         (version, graft.vector.HnswIndex.prepare(
           nextSeg.fold(raw)(ns => raw.where(col("seg") < ns))))
       }
@@ -2413,7 +2393,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
   /** Test/ops visibility: the persisted HNSW graph rows / current
     * graph-segment count (base shards + appended batch segments). */
   private[graft] def hnswGraphRows: DataFrame =
-    catalog.read(db, GraftCollection.hnswGraph(coll))
+    catalog.read(db, Hnsw.at(coll, "graph"))
   private[graft] def hnswGraphSegments: Int =
     hnswGraphRows.select("seg").distinct().count().toInt
 
@@ -2427,15 +2407,15 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
   def rebuildLshIndex(nBits: Int = 64, bands: Int = 16, seed: Long = 42L): Unit = {
     val dim = beginVectorRebuild("LSH")
     val base = mutationSeg
-    catalog.createCollectionIfNotExists(db, GraftCollection.lshBuckets(coll))
-    catalog.write(db, GraftCollection.lshBuckets(coll),
+    catalog.createCollectionIfNotExists(db, Lsh.at(coll, "buckets"))
+    catalog.write(db, Lsh.at(coll, "buckets"),
       graft.vector.LshIndex.bucketTable(df, idCol, vecCol, nBits, bands, dim, seed)
         .withColumn(GraftCollection.SegCol, lit(base)),
       partitionBy = Seq(GraftCollection.SegCol))
     catalog.updateMeta(db, coll, Map(
       "index.lsh.nbits" -> nBits.toString, "index.lsh.bands" -> bands.toString,
       "index.lsh.dim" -> dim.toString, "index.lsh.seed" -> seed.toString,
-      "index.lsh.base_seg" -> base.toString))
+      Lsh.baseSegKey -> base.toString))
   }
 
   /** Banded ANN served from the persisted bucket table (ledger-masked:
@@ -2443,9 +2423,9 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
   def searchLsh(queries: DataFrame, qIdCol: String, qVecCol: String,
                 limit: Int = 10): DataFrame = {
     val meta = describe
-    require(meta.contains("index.lsh.nbits"), "no LSH index: run rebuildLshIndex first")
-    val buckets = liveSegRows(catalog.read(db, GraftCollection.lshBuckets(coll)),
-      "id", meta.get("index.lsh.base_seg").map(_.toInt).getOrElse(0))
+    require(meta.contains(Lsh.presenceKey), "no LSH index: run rebuildLshIndex first")
+    val buckets = liveSegRows(catalog.read(db, Lsh.at(coll, "buckets")),
+      "id", meta.get(Lsh.baseSegKey).map(_.toInt).getOrElse(0))
     graft.vector.LshIndex.annIndexed(buckets,
       df, idCol, vecCol, queries, qIdCol, qVecCol, limit,
       meta("index.lsh.nbits").toInt, meta("index.lsh.bands").toInt,
@@ -2465,14 +2445,14 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
       .minhashSignatures(df, idCol, textCol, shingleN, numPerms, seed)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      catalog.createCollectionIfNotExists(db, GraftCollection.mhSig(coll))
-      catalog.write(db, GraftCollection.mhSig(coll),
+      catalog.createCollectionIfNotExists(db, Mh.at(coll, "sig"))
+      catalog.write(db, Mh.at(coll, "sig"),
         sig.withColumn(GraftCollection.SegCol, lit(base)),
         partitionBy = Seq(GraftCollection.SegCol))
       // the joinable band-bucket form, h-clustered so an ingest batch's
       // In(h, ...) probe prunes to its own rowgroups (see nearDupFilter)
-      catalog.createCollectionIfNotExists(db, GraftCollection.mhBkt(coll))
-      catalog.write(db, GraftCollection.mhBkt(coll),
+      catalog.createCollectionIfNotExists(db, Mh.at(coll, "bkt"))
+      catalog.write(db, Mh.at(coll, "bkt"),
         graft.dedup.Dedup.minhashBandBuckets(sig, numPerms, bands)
           .repartitionByRange(col("h")).sortWithinPartitions("h")
           .withColumn(GraftCollection.SegCol, lit(base)),
@@ -2481,7 +2461,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
         "index.mh.text_col" -> textCol, "index.mh.shingle" -> shingleN.toString,
         "index.mh.perms" -> numPerms.toString, "index.mh.seed" -> seed.toString,
         "index.mh.bands" -> bands.toString,
-        "index.mh.base_seg" -> base.toString))
+        Mh.baseSegKey -> base.toString))
     } finally sig.unpersist()
   }
 
@@ -2489,10 +2469,10 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * table (ledger-masked). */
   def nearDupMinhash(bands: Int = 8, threshold: Double = 0.5): DataFrame = {
     val meta = describe
-    require(meta.contains("index.mh.text_col"),
+    require(meta.contains(Mh.presenceKey),
       "no minhash index: run rebuildMinhashIndex first")
-    val sig = liveSegRows(catalog.read(db, GraftCollection.mhSig(coll)),
-      "doc_id", meta.get("index.mh.base_seg").map(_.toInt).getOrElse(0))
+    val sig = liveSegRows(catalog.read(db, Mh.at(coll, "sig")),
+      "doc_id", meta.get(Mh.baseSegKey).map(_.toInt).getOrElse(0))
     graft.dedup.Dedup.minhashLshFromSignatures(sig,
       meta("index.mh.perms").toInt, bands, threshold)
   }
@@ -2538,13 +2518,13 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
                     batchIdCol: Option[String],
                     batchTextCol: Option[String], inCap: Int): DataFrame = {
     val meta = describe
-    require(meta.contains("index.mh.text_col"),
+    require(meta.contains(Mh.presenceKey),
       "no minhash index: run rebuildMinhashIndex first")
-    require(catalog.collectionExists(db, GraftCollection.mhBkt(coll)),
+    require(catalog.collectionExists(db, Mh.at(coll, "bkt")),
       "no band-bucket table: rebuild the minhash index (pre-bucket-artifact index)")
     val perms = meta("index.mh.perms").toInt
     val bands = meta.getOrElse("index.mh.bands", "8").toInt
-    val base = meta.get("index.mh.base_seg").map(_.toInt).getOrElse(0)
+    val base = meta.get(Mh.baseSegKey).map(_.toInt).getOrElse(0)
     val idC = batchIdCol.getOrElse(idCol)
     val txtC = batchTextCol.getOrElse(meta("index.mh.text_col"))
     val sig = graft.dedup.Dedup.minhashSignatures(
@@ -2562,7 +2542,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val hs = nb.select("h").distinct().limit(inCap + 1).collect().map(_.getLong(0))
       val oldBktAll = liveSegRows(
-        catalog.read(db, GraftCollection.mhBkt(coll)), "doc_id", base)
+        catalog.read(db, Mh.at(coll, "bkt")), "doc_id", base)
       val oldBkt =
         if (hs.length <= inCap) oldBktAll.where(col("h").isin(hs: _*))
         else oldBktAll
@@ -2575,7 +2555,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
       val oldIds = cand.select("id_old").distinct().limit(inCap + 1)
         .collect().map(_.get(0))
       val oldSigAll = liveSegRows(
-        catalog.read(db, GraftCollection.mhSig(coll)), "doc_id", base)
+        catalog.read(db, Mh.at(coll, "sig")), "doc_id", base)
       val oldSig =
         if (oldIds.length <= inCap) oldSigAll.where(col("doc_id").isin(oldIds: _*))
         else oldSigAll
@@ -2608,23 +2588,23 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * [[rebuildMinhashIndex]]). */
   def rebuildSimhashIndex(textCol: String = "text"): Unit = {
     val base = mutationSeg
-    catalog.createCollectionIfNotExists(db, GraftCollection.shSig(coll))
-    catalog.write(db, GraftCollection.shSig(coll),
+    catalog.createCollectionIfNotExists(db, Sh.at(coll, "sig"))
+    catalog.write(db, Sh.at(coll, "sig"),
       graft.dedup.Dedup.simhashSignatures(df, idCol, textCol)
         .withColumn(GraftCollection.SegCol, lit(base)),
       partitionBy = Seq(GraftCollection.SegCol))
     catalog.updateMeta(db, coll, Map(
-      "index.sh.text_col" -> textCol, "index.sh.base_seg" -> base.toString))
+      "index.sh.text_col" -> textCol, Sh.baseSegKey -> base.toString))
   }
 
   /** SimHash near-dup pairs served from the persisted signature table
     * (ledger-masked). */
   def nearDupSimhash(maxHamming: Int = 3): DataFrame = {
     val meta = describe
-    require(meta.contains("index.sh.text_col"),
+    require(meta.contains(Sh.presenceKey),
       "no simhash index: run rebuildSimhashIndex first")
-    val sig = liveSegRows(catalog.read(db, GraftCollection.shSig(coll)),
-      "doc_id", meta.get("index.sh.base_seg").map(_.toInt).getOrElse(0))
+    val sig = liveSegRows(catalog.read(db, Sh.at(coll, "sig")),
+      "doc_id", meta.get(Sh.baseSegKey).map(_.toInt).getOrElse(0))
     graft.dedup.Dedup.simhashPairsFromSignatures(sig, maxHamming)
   }
 
@@ -2651,7 +2631,8 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
   def segmentDebt: Int = segmentDebt(describe)
 
   private def segmentDebt(meta: Map[String, String]): Int = {
-    val bases = GraftCollection.baseSegKeys.flatMap(meta.get).map(_.toInt)
+    val bases = IndexFamily.all.filter(_.segmented)
+      .flatMap(f => meta.get(f.baseSegKey)).map(_.toInt)
     if (bases.isEmpty) 0
     else meta.get("mut.seg").map(_.toInt).getOrElse(0) - bases.min
   }
@@ -2669,56 +2650,35 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
   def compactIndexes(): Unit = {
     val meta = describe
     val seg = mutationSeg
-    def compact(artifact: String, rowId: String, baseKey: String,
-                layout: DataFrame => DataFrame = identity,
-                subPartition: Seq[String] = Nil,
-                surrogate: Boolean = false): Unit =
-      if (meta.contains(baseKey) && catalog.collectionExists(db, artifact)) {
-        val live = liveSegRows(catalog.read(db, artifact), rowId,
-          meta(baseKey).toInt, surrogate)
-        catalog.overwriteFromSelf(db, artifact,
-          layout(live).withColumn(GraftCollection.SegCol, lit(seg)),
-          partitionBy = GraftCollection.SegCol +: subPartition)
-        catalog.updateMeta(db, coll, Map(baseKey -> seg.toString))
+    for (f <- IndexFamily.all if meta.contains(f.baseSegKey); a <- f.artifacts) {
+      val artifact = f.at(coll, a.role)
+      if (catalog.collectionExists(db, artifact)) a.fold match {
+        case Fold.Rows(rowId, surrogate, layout, subPartition) =>
+          val live = liveSegRows(catalog.read(db, artifact), rowId,
+            meta(f.baseSegKey).toInt, surrogate)
+          catalog.overwriteFromSelf(db, artifact,
+            layout(live).withColumn(GraftCollection.SegCol, lit(seg)),
+            partitionBy = GraftCollection.SegCol +: subPartition)
+          catalog.updateMeta(db, coll, Map(f.baseSegKey -> seg.toString))
+        // ball-radius stats fold by max(rho) per cell — NOT liveSegRows
+        // masking (stats are per-cell aggregates, not per-doc rows): the
+        // max over all generations stays an upper bound because deletes
+        // only shrink cells (conservative-correct, never recall-lossy)
+        case Fold.CellStats =>
+          catalog.overwriteFromSelf(db, artifact,
+            catalog.read(db, artifact)
+              .groupBy("cell").agg(max("rho").as("rho"))
+              .withColumn(GraftCollection.SegCol, lit(seg)),
+            partitionBy = Seq(GraftCollection.SegCol))
+        // HNSW has no row-level fold — a graph's value IS its edge
+        // structure — so this family compacts with a TIERED MERGE POLICY
+        // (the Lucene answer): fold only the SMALL segments into fresh
+        // merged segment graph(s) at O(merged·log merged), leaving the
+        // big base-tier graphs untouched until their own tier fills.
+        case Fold.Graph => compactHnsw(meta, seg)
+        case Fold.Model =>
       }
-    compact(GraftCollection.ftPostings(coll), "doc_id", "index.ft.base_seg",
-      _.repartition(col("term")).sortWithinPartitions("term"))
-    compact(GraftCollection.lshBuckets(coll), "id", "index.lsh.base_seg")
-    compact(GraftCollection.mhSig(coll), "doc_id", "index.mh.base_seg")
-    compact(GraftCollection.mhBkt(coll), "doc_id", "index.mh.base_seg",
-      _.repartitionByRange(col("h")).sortWithinPartitions("h"))
-    compact(GraftCollection.shSig(coll), "doc_id", "index.sh.base_seg")
-    compact(GraftCollection.pqCodes(coll), "id", "index.pq.base_seg",
-      surrogate = true)
-    compact(GraftCollection.bqWords(coll), "id", "index.bq.base_seg",
-      surrogate = true)
-    compact(GraftCollection.svPostings(coll), "doc_id", "index.sv.base_seg",
-      _.repartition(col("term")).sortWithinPartitions("term"))
-    compact(GraftCollection.ivfPqCodes(coll), "id", "index.ivfpq.base_seg",
-      _.repartition(col("cell")), Seq("cell"), surrogate = true)
-    compact(GraftCollection.ivfSqCodes(coll), "id", "index.ivfsq.base_seg",
-      _.repartition(col("cell")), Seq("cell"), surrogate = true)
-    // ball-radius stats fold by max(rho) per cell — NOT liveSegRows
-    // masking (stats are per-cell aggregates, not per-doc rows): the
-    // max over all generations stays an upper bound because deletes
-    // only shrink cells (conservative-correct, never recall-lossy)
-    def foldStats(artifact: String, baseKey: String): Unit =
-      if (meta.contains(baseKey) && catalog.collectionExists(db, artifact))
-        catalog.overwriteFromSelf(db, artifact,
-          catalog.read(db, artifact)
-            .groupBy("cell").agg(max("rho").as("rho"))
-            .withColumn(GraftCollection.SegCol, lit(seg)),
-          partitionBy = Seq(GraftCollection.SegCol))
-    foldStats(GraftCollection.ivfSqStats(coll), "index.ivfsq.base_seg")
-    foldStats(GraftCollection.ivfPqStats(coll), "index.ivfpq.base_seg")
-    // HNSW has no row-level fold — a graph's value IS its edge
-    // structure — so this family compacts with a TIERED MERGE POLICY
-    // (the Lucene answer): fold only the SMALL segments into fresh
-    // merged segment graph(s) at O(merged·log merged), leaving the
-    // big base-tier graphs untouched until their own tier fills.
-    if (meta.contains("index.hnsw.base_seg") &&
-        catalog.collectionExists(db, GraftCollection.hnswGraph(coll)))
-      compactHnsw(meta, seg)
+    }
     // every family now serves from its single fresh segment — the
     // ledger has nothing left to mask
     if (catalog.collectionExists(db, GraftCollection.mutLedger(coll)))
@@ -2757,7 +2717,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     val live = df.where(col(vecCol).isNotNull)
       .select(nodeKey.as("id"), col(vecCol).as(vecCol))
     HnswMaintain.compact(hnswStore, live, vecCol, meta0,
-      publishExtra = Map("index.hnsw.base_seg" -> seg.toString))
+      publishExtra = Map(Hnsw.baseSegKey -> seg.toString))
     // re-derive the default serving beam from the FOLDED graph's
     // ACTUAL largest segment (ef is a per-segment beam; a tiered merge
     // produces shard sizes the configured-count division does not
@@ -2770,7 +2730,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     // an all-deleted collection folds to an EMPTY graph: max over zero
     // groups is null, and the derivation must land on the floor (16,
     // what the old n=0 path returned), not NPE mid-compaction
-    val maxSegRow = catalog.read(db, GraftCollection.hnswGraph(coll))
+    val maxSegRow = catalog.read(db, Hnsw.at(coll, "graph"))
       .groupBy(col("seg")).count()
       .agg(org.apache.spark.sql.functions.max("count")).head
     val maxSeg = if (maxSegRow.isNullAt(0)) 0L else maxSegRow.getLong(0)
@@ -2800,23 +2760,21 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     // per-family artifact names: IVF_PQ never shares tables with the
     // plain IVF / PQ indexes, so a rebuild of one can never leave
     // another family probing against foreign assignments
-    Seq(GraftCollection.ivfPqCentroids(coll), GraftCollection.ivfPqCodebooks(coll),
-        GraftCollection.ivfPqCodes(coll), GraftCollection.ivfPqStats(coll))
-      .foreach(catalog.createCollectionIfNotExists(db, _))
-    catalog.write(db, GraftCollection.ivfPqCentroids(coll),
+    IvfPq.collections(coll).foreach(catalog.createCollectionIfNotExists(db, _))
+    catalog.write(db, IvfPq.at(coll, "centroids"),
       graft.vector.IvfIndex.centroids(model.ivf, spark))
-    catalog.write(db, GraftCollection.ivfPqCodebooks(coll),
+    catalog.write(db, IvfPq.at(coll, "codebooks"),
       graft.vector.PqIndex.codebooksDf(model.pq, spark))
     // (__seg, cell)-partitioned codes: an nprobe search lists only
     // probed cells (inside each segment); upserts append new segments
     val baseSeg = mutationSeg
-    catalog.write(db, GraftCollection.ivfPqCodes(coll),
+    catalog.write(db, IvfPq.at(coll, "codes"),
       enc.withColumn(GraftCollection.SegCol, lit(baseSeg)),
       partitionBy = Seq(GraftCollection.SegCol, "cell"))
     // per-cell ball radii — the exact-radius route's cell certificate
     // (same contract as the IVF_SQ8 stats: appends add rows, deletes
     // need nothing, compaction max-folds)
-    catalog.write(db, GraftCollection.ivfPqStats(coll),
+    catalog.write(db, IvfPq.at(coll, "stats"),
       graft.vector.IvfIndex.cellStats(
           model.ivf.kmeans.clusterCenters.map(_.toArray).zipWithIndex,
           keyed, vecCol)
@@ -2825,7 +2783,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     catalog.updateMeta(db, coll, Map(
       "index.ivfpq.nlist" -> nl.toString, "index.ivfpq.m" -> m.toString,
       "index.ivfpq.k" -> k.toString, "index.ivfpq.dim" -> dim.toString,
-      "index.ivfpq.base_seg" -> baseSeg.toString,
+      IvfPq.baseSegKey -> baseSeg.toString,
       "index.ivfpq.metric" -> metric,
       // calibrated default probe count (the IVF_SQ8 rationale)
       "index.ivfpq.nprobe_default" -> graft.vector.IvfIndex.calibrateNprobe(
@@ -2858,7 +2816,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * the row-118 byte-equality, so coexistence needs no recall
     * argument). `metric` defaults to the primary HNSW graph's stored
     * metric so the routed radius gates in the metric the collection
-    * actually serves. Upserts maintain BOTH artifacts (the ivfSqLive
+    * actually serves. Upserts maintain BOTH artifacts (the IVF_SQ8
     * append arm fires exactly as for a primary SQ8 index); deletes
     * need nothing (cells only shrink). Rebuilding the graph
     * invalidates the sidecar like any sibling — rebuild the sidecar
@@ -2877,7 +2835,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
         "cannot build IVF_SQ8 sidecar on an empty collection"))
     buildIvfSqArtifacts(nlist, m, dim)
     // the staleness witness (r13 verdict #4): this key deliberately
-    // lives OUTSIDE every invalidation list, so when a later vector
+    // lives OUTSIDE every family meta prefix, so when a later vector
     // rebuild drops the sidecar's artifacts it SURVIVES — the one
     // piece of evidence that a sidecar was wanted here, which is what
     // lets sidecarStale report the silent FLAT fallback instead of
@@ -2897,7 +2855,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
   def sidecarStale: Boolean = {
     val meta = describe
     meta.get("index.sidecar.wanted").contains("true") &&
-      !liveIndexes(meta).ivfSqLive
+      !liveIndexes(meta)(IvfSq)
   }
 
   /** One-line operator recommendation when [[sidecarStale]]. */
@@ -2919,9 +2877,8 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * only the witness clears. */
   def dropCertificateSidecar(): Unit = {
     val live = liveIndexes(describe)
-    if (live.ivfSqLive && live.hnswLive)
-      invalidateVectorIndex(keepIvf = true, keepLsh = true, keepPq = true,
-        keepIvfPq = true, keepIvfSq = false, keepHnsw = true, keepBq = true)
+    if (live(IvfSq) && live(Hnsw))
+      invalidate(keep = IndexFamily.all.toSet - IvfSq)
     catalog.updateMeta(db, coll, Map("index.sidecar.wanted" -> "false"))
   }
 
@@ -2934,17 +2891,15 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     val model = graft.vector.IvfSq.train(base, vecCol, nl)
     val (keyed, kid) = indexKeyed(base)
     val enc = graft.vector.IvfSq.encode(model, keyed, kid, vecCol)
-    Seq(GraftCollection.ivfSqCentroids(coll), GraftCollection.ivfSqBounds(coll),
-        GraftCollection.ivfSqCodes(coll), GraftCollection.ivfSqStats(coll))
-      .foreach(catalog.createCollectionIfNotExists(db, _))
-    catalog.write(db, GraftCollection.ivfSqCentroids(coll),
+    IvfSq.collections(coll).foreach(catalog.createCollectionIfNotExists(db, _))
+    catalog.write(db, IvfSq.at(coll, "centroids"),
       graft.vector.IvfIndex.centroids(model.ivf, spark))
-    catalog.write(db, GraftCollection.ivfSqBounds(coll),
+    catalog.write(db, IvfSq.at(coll, "bounds"),
       graft.vector.SqIndex.boundsDf(model.sq, spark))
     // (__seg, cell)-partitioned codes, exactly like IVF_PQ: an nprobe
     // search lists only probed cells; upserts append new segments
     val baseSeg = mutationSeg
-    catalog.write(db, GraftCollection.ivfSqCodes(coll),
+    catalog.write(db, IvfSq.at(coll, "codes"),
       enc.withColumn(GraftCollection.SegCol, lit(baseSeg)),
       partitionBy = Seq(GraftCollection.SegCol, "cell"))
     // per-cell ball radii (rho = max member-to-centroid distance, from
@@ -2953,7 +2908,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     // shrink cells, so stored rho stays a valid upper bound with no
     // maintenance; appends contribute their own rows (max-folded at
     // read and at compaction).
-    catalog.write(db, GraftCollection.ivfSqStats(coll),
+    catalog.write(db, IvfSq.at(coll, "stats"),
       graft.vector.IvfSq.cellStats(
           model.ivf.kmeans.clusterCenters.map(_.toArray).zipWithIndex,
           keyed, vecCol)
@@ -2961,7 +2916,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
       partitionBy = Seq(GraftCollection.SegCol))
     catalog.updateMeta(db, coll, Map(
       "index.ivfsq.nlist" -> nl.toString, "index.ivfsq.dim" -> dim.toString,
-      "index.ivfsq.base_seg" -> baseSeg.toString,
+      IvfSq.baseSegKey -> baseSeg.toString,
       "index.ivfsq.metric" -> metric,
       // empirically calibrated default probe count (the row-123
       // recall-floor contract on the cell axis): a fixed default
@@ -2984,41 +2939,19 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * limit·c candidates against their original vectors. */
   def searchIvfSq(queries: DataFrame, qIdCol: String, qVecCol: String,
                   limit: Int = 10, nprobe: Int = 0,
-                  candMult: Option[Int] = None): DataFrame = {
-    val meta = describe
-    require(meta.contains("index.ivfsq.nlist"), "no IVF_SQ8 index: run rebuildIvfSqIndex first")
-    // nprobe = 0 (the default) is the DOCUMENTED sentinel for the
-    // CALIBRATED probe count persisted at rebuild (row 127's
-    // recall-floor contract on the cell axis — a fixed default
-    // degrades silently as auto-√N nlist grows); explicit positive
-    // nprobe is the caller's override, legacy indexes without the key
-    // serve the historical 4, and negatives are rejected rather than
-    // silently aliased onto the sentinel (the nlist ≤ 0 convention)
-    require(nprobe >= 0, s"nprobe=$nprobe (0 = the calibrated default)")
-    val np = if (nprobe > 0) nprobe
-             else meta.get("index.ivfsq.nprobe_default").map(_.toInt).getOrElse(4)
-    val sq = sqModelFromMeta(meta)
-    val centers = catalog.read(db, GraftCollection.ivfSqCentroids(coll))
-      .select(col("centroid"), col("cell")).collect()
-      .map(r => (r.getSeq[Double](0).toArray, r.getInt(1))).toSeq
-    val codes = liveSegRows(catalog.read(db, GraftCollection.ivfSqCodes(coll)),
-      "id", meta.get("index.ivfsq.base_seg").map(_.toInt).getOrElse(0),
-      surrogate = true)
+                  candMult: Option[Int] = None): DataFrame =
     // serves in the index's STORED metric (gate-space probes + scan;
     // the rerank arm closes in metric space, the native arm emits the
     // dequantized-cosine estimate on a cosine-built index)
-    val m = quantMetric(meta, "index.ivfsq")
-    val (qarr, remap) = collectQueries(queries, qIdCol, qVecCol)
-    val (gq, _, rr) = gateQueries(m, qarr, None)
-    remapQueryIds(candMult match {
-      case None => restoreStringIds(
-        graft.vector.IvfSq.searchStored(centers, sq, codes, gq, limit, np,
-          cosineScores = m == "cosine"))
-      case Some(c) => graft.vector.IvfSq.searchStoredRerank(centers, sq, codes,
-        df, idCol, vecCol, gq, limit, np, c, nodeKey = nodeKeyOpt,
-        rerank = rr)
-    }, remap)
-  }
+    servedCoded(IvfSq, queries, qIdCol, qVecCol) { c =>
+      candMult match {
+        case None => restoreStringIds(graft.vector.IvfSq.searchStored(c.centers,
+          c.sq, c.codes, c.gq, limit, c.probes(nprobe), cosineScores = c.metric == "cosine"))
+        case Some(m) => graft.vector.IvfSq.searchStoredRerank(c.centers, c.sq,
+          c.codes, c.snapshot, idCol, vecCol, c.gq, limit, c.probes(nprobe), m,
+          nodeKey = nodeKeyOpt, rerank = c.rr)
+      }
+    }
 
   /** EXACT L2 radius search served from the IVF_SQ8 artifacts —
     * certificate-backed at BOTH levels, so the result equals the FLAT
@@ -3044,43 +2977,12 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * an index built since cell stats shipped (rebuild refreshes). */
   def searchIvfSqRadius(queries: DataFrame, qIdCol: String, qVecCol: String,
                         radius: Double, limit: Int = 10,
-                        filter: String = ""): DataFrame = {
-    val meta = describe
-    require(meta.contains("index.ivfsq.nlist"),
-      "no IVF_SQ8 index: run rebuildIvfSqIndex first")
-    require(catalog.collectionExists(db, GraftCollection.ivfSqStats(coll)),
-      "IVF_SQ8 index predates radius serving (no cell stats): rerun rebuildIvfSqIndex")
-    val sq = sqModelFromMeta(meta)
-    val centers = catalog.read(db, GraftCollection.ivfSqCentroids(coll))
-      .select(col("centroid"), col("cell")).collect()
-      .map(r => (r.getSeq[Double](0).toArray, r.getInt(1))).toSeq
-    val stats = catalog.read(db, GraftCollection.ivfSqStats(coll))
-    val filtered = if (filter.isEmpty) None
-                   else Some(df.where(FilterParser.parse(filter)))
-    val codes0 = liveSegRows(catalog.read(db, GraftCollection.ivfSqCodes(coll)),
-      "id", meta.get("index.ivfsq.base_seg").map(_.toInt).getOrElse(0),
-      surrogate = true)
-    // the sibling routes' guard (r11 ADVICE): the stats-existence check
-    // above already implies a post-resid rebuild, but a raw
-    // AnalysisException from the internal select("resid") is not an
-    // actionable message — fail like searchIvfSqExact does
-    require(codes0.columns.contains("resid"),
-      "IVF_SQ8 index predates radius serving (no per-row resid): rerun rebuildIvfSqIndex")
-    val codes = filtered.fold(codes0)(f =>
-      codes0.join(f.select(nodeKey.as("id")), Seq("id"), "left_semi"))
-    // radius gates in the index's STORED metric (cosine: similarity ≥
-    // radius, served through the unit-sphere gate space — see the
-    // quantized-family metric support section)
-    val m = quantMetric(meta, "index.ivfsq")
-    val (qarr, remap) = collectQueries(queries, qIdCol, qVecCol)
-    val (gq, gr, rr) = gateQueries(m, qarr, Some(radius))
-    remapQueryIds(
-      graft.vector.IvfSq.searchStoredRadius(centers,
-        graft.vector.IvfIndex.collectCellRho(stats), sq, codes,
-        filtered.getOrElse(df), idCol, vecCol, gq, gr, limit,
-        nodeKey = nodeKeyOpt, rerank = rr),
-      remap)
-  }
+                        filter: String = ""): DataFrame =
+    servedCoded(IvfSq, queries, qIdCol, qVecCol, filter, Some(radius)) { c =>
+      graft.vector.IvfSq.searchStoredRadius(c.centers, c.cellRho, c.sq, c.codes,
+        c.snapshot, idCol, vecCol, c.gq, c.gr, limit, nodeKey = nodeKeyOpt,
+        rerank = c.rr)
+    }
 
   /** EXACT L2 top-k from the SQ8 coded scan — the kth-upper-bound
     * certificate ([[graft.vector.SqIndex.searchTopKExact]]): pass 1
@@ -3091,29 +2993,11 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * two passes over 1-byte/dim codes + a sliver of raw vectors.
     * `filter` semi-joins the codes first; exact among eligible rows. */
   def searchIvfSqExact(queries: DataFrame, qIdCol: String, qVecCol: String,
-                       limit: Int = 10, filter: String = ""): DataFrame = {
-    val meta = describe
-    require(meta.contains("index.ivfsq.nlist"),
-      "no IVF_SQ8 index: run rebuildIvfSqIndex first")
-    val sq = sqModelFromMeta(meta)
-    val filtered = if (filter.isEmpty) None
-                   else Some(df.where(FilterParser.parse(filter)))
-    val codes0 = liveSegRows(catalog.read(db, GraftCollection.ivfSqCodes(coll)),
-      "id", meta.get("index.ivfsq.base_seg").map(_.toInt).getOrElse(0),
-      surrogate = true)
-    require(codes0.columns.contains("resid"),
-      "IVF_SQ8 index predates exact serving (no per-row resid): rerun rebuildIvfSqIndex")
-    val codes = filtered.fold(codes0)(f =>
-      codes0.join(f.select(nodeKey.as("id")), Seq("id"), "left_semi"))
-    val m = quantMetric(meta, "index.ivfsq")
-    val (qarr, remap) = collectQueries(queries, qIdCol, qVecCol)
-    val (gq, _, rr) = gateQueries(m, qarr, None)
-    remapQueryIds(
-      graft.vector.SqIndex.searchTopKExact(sq, codes,
-        filtered.getOrElse(df), idCol, vecCol, gq, limit,
-        nodeKey = nodeKeyOpt, rerank = rr),
-      remap)
-  }
+                       limit: Int = 10, filter: String = ""): DataFrame =
+    servedCoded(IvfSq, queries, qIdCol, qVecCol, filter, certified = true) { c =>
+      graft.vector.SqIndex.searchTopKExact(c.sq, c.codes, c.snapshot, idCol,
+        vecCol, c.gq, limit, nodeKey = nodeKeyOpt, rerank = c.rr)
+    }
 
   /** Train + persist the distilled document-quality model (the
     * curation front door's learned filter — no reference counterpart;
@@ -3417,34 +3301,16 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * bounded-sliver vector fetch. */
   def searchIvfPq(queries: DataFrame, qIdCol: String, qVecCol: String,
                   limit: Int = 10, nprobe: Int = 0,
-                  candMult: Option[Int] = None): DataFrame = {
-    val meta = describe
-    require(meta.contains("index.ivfpq.nlist"), "no IVF_PQ index: run rebuildIvfPqIndex first")
-    // nprobe = 0 sentinel = the CALIBRATED default persisted at
-    // rebuild (searchIvfSq's contract, negatives rejected there too)
-    require(nprobe >= 0, s"nprobe=$nprobe (0 = the calibrated default)")
-    val np = if (nprobe > 0) nprobe
-             else meta.get("index.ivfpq.nprobe_default").map(_.toInt).getOrElse(4)
-    val pq = pqModelFromMeta(meta, "index.ivfpq", GraftCollection.ivfPqCodebooks(coll))
-    val centers = catalog.read(db, GraftCollection.ivfPqCentroids(coll))
-      .select(col("centroid"), col("cell")).collect()
-      .map(r => (r.getSeq[Double](0).toArray, r.getInt(1))).toSeq
-    val codes = liveSegRows(catalog.read(db, GraftCollection.ivfPqCodes(coll)),
-      "id", meta.get("index.ivfpq.base_seg").map(_.toInt).getOrElse(0),
-      surrogate = true)
-    // stored-metric serving (the searchIvfSq discipline)
-    val m = quantMetric(meta, "index.ivfpq")
-    val (qarr, remap) = collectQueries(queries, qIdCol, qVecCol)
-    val (gq, _, rr) = gateQueries(m, qarr, None)
-    remapQueryIds(candMult match {
-      case None => restoreStringIds(
-        graft.vector.IvfPq.searchStored(centers, pq, codes, gq, limit, np,
-          cosineScores = m == "cosine"))
-      case Some(c) => graft.vector.IvfPq.searchStoredRerank(centers, pq, codes,
-        df, idCol, vecCol, gq, limit, np, c, nodeKey = nodeKeyOpt,
-        rerank = rr)
-    }, remap)
-  }
+                  candMult: Option[Int] = None): DataFrame =
+    servedCoded(IvfPq, queries, qIdCol, qVecCol) { c =>
+      candMult match {
+        case None => restoreStringIds(graft.vector.IvfPq.searchStored(c.centers,
+          c.pq, c.codes, c.gq, limit, c.probes(nprobe), cosineScores = c.metric == "cosine"))
+        case Some(m) => graft.vector.IvfPq.searchStoredRerank(c.centers, c.pq,
+          c.codes, c.snapshot, idCol, vecCol, c.gq, limit, c.probes(nprobe), m,
+          nodeKey = nodeKeyOpt, rerank = c.rr)
+      }
+    }
 
   /** EXACT L2 radius search from the IVF_PQ artifacts — the
     * [[searchIvfSqRadius]] certificates (per-cell ball radius at file
@@ -3456,84 +3322,32 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * before the scan and reranks against the same filtered snapshot. */
   def searchIvfPqRadius(queries: DataFrame, qIdCol: String, qVecCol: String,
                         radius: Double, limit: Int = 10,
-                        filter: String = ""): DataFrame = {
-    val meta = describe
-    require(meta.contains("index.ivfpq.nlist"),
-      "no IVF_PQ index: run rebuildIvfPqIndex first")
-    require(catalog.collectionExists(db, GraftCollection.ivfPqStats(coll)),
-      "IVF_PQ index predates radius serving (no cell stats): rerun rebuildIvfPqIndex")
-    val pq = pqModelFromMeta(meta, "index.ivfpq", GraftCollection.ivfPqCodebooks(coll))
-    val centers = catalog.read(db, GraftCollection.ivfPqCentroids(coll))
-      .select(col("centroid"), col("cell")).collect()
-      .map(r => (r.getSeq[Double](0).toArray, r.getInt(1))).toSeq
-    val stats = catalog.read(db, GraftCollection.ivfPqStats(coll))
-    val filtered = if (filter.isEmpty) None
-                   else Some(df.where(FilterParser.parse(filter)))
-    val codes0 = liveSegRows(catalog.read(db, GraftCollection.ivfPqCodes(coll)),
-      "id", meta.get("index.ivfpq.base_seg").map(_.toInt).getOrElse(0),
-      surrogate = true)
-    require(codes0.columns.contains("resid"),
-      "IVF_PQ index predates radius serving (no per-row resid): rerun rebuildIvfPqIndex")
-    val codes = filtered.fold(codes0)(f =>
-      codes0.join(f.select(nodeKey.as("id")), Seq("id"), "left_semi"))
-    val m = quantMetric(meta, "index.ivfpq")
-    val (qarr, remap) = collectQueries(queries, qIdCol, qVecCol)
-    val (gq, gr, rr) = gateQueries(m, qarr, Some(radius))
-    remapQueryIds(
-      graft.vector.IvfPq.searchStoredRadius(centers,
-        graft.vector.IvfIndex.collectCellRho(stats), pq, codes,
-        filtered.getOrElse(df), idCol, vecCol, gq, gr, limit,
-        nodeKey = nodeKeyOpt, rerank = rr),
-      remap)
-  }
+                        filter: String = ""): DataFrame =
+    servedCoded(IvfPq, queries, qIdCol, qVecCol, filter, Some(radius)) { c =>
+      graft.vector.IvfPq.searchStoredRadius(c.centers, c.cellRho, c.pq, c.codes,
+        c.snapshot, idCol, vecCol, c.gq, c.gr, limit, nodeKey = nodeKeyOpt,
+        rerank = c.rr)
+    }
 
   /** PQ search served from the persisted index: ADC over the stored
     * codes narrows to limit·candMult candidates, then the original
     * vectors of that sliver are exactly re-ranked (L2). */
   def searchPq(queries: DataFrame, qIdCol: String, qVecCol: String,
-               limit: Int = 10, candMult: Int = 10): DataFrame = {
-    val meta = describe
-    require(meta.contains("index.pq.m"), "no PQ index: run rebuildPqIndex first")
-    val model = pqModelFromMeta(meta, "index.pq", GraftCollection.pqCodebooks(coll))
-    val codes = liveSegRows(catalog.read(db, GraftCollection.pqCodes(coll)),
-      "id", meta.get("index.pq.base_seg").map(_.toInt).getOrElse(0),
-      surrogate = true)
-    val m = quantMetric(meta, "index.pq")
-    val (qarr, remap) = collectQueries(queries, qIdCol, qVecCol)
-    val (gq, _, rr) = gateQueries(m, qarr, None)
-    remapQueryIds(
-      graft.vector.PqIndex.searchRerank(model, codes,
-        df, idCol, vecCol, gq, limit, candMult, nodeKey = nodeKeyOpt,
-        rerank = rr),
-      remap)
-  }
+               limit: Int = 10, candMult: Int = 10): DataFrame =
+    servedCoded(Pq, queries, qIdCol, qVecCol) { c =>
+      graft.vector.PqIndex.searchRerank(c.pq, c.codes, c.snapshot, idCol, vecCol,
+        c.gq, limit, candMult, nodeKey = nodeKeyOpt, rerank = c.rr)
+    }
 
   /** EXACT L2 top-k from the PQ ADC scan — the kth-upper-bound
     * certificate ([[graft.vector.PqIndex.searchTopKExact]]; see
     * [[searchIvfSqExact]] for the contract). */
   def searchPqExact(queries: DataFrame, qIdCol: String, qVecCol: String,
-                    limit: Int = 10, filter: String = ""): DataFrame = {
-    val meta = describe
-    require(meta.contains("index.pq.m"), "no PQ index: run rebuildPqIndex first")
-    val model = pqModelFromMeta(meta, "index.pq", GraftCollection.pqCodebooks(coll))
-    val filtered = if (filter.isEmpty) None
-                   else Some(df.where(FilterParser.parse(filter)))
-    val codes0 = liveSegRows(catalog.read(db, GraftCollection.pqCodes(coll)),
-      "id", meta.get("index.pq.base_seg").map(_.toInt).getOrElse(0),
-      surrogate = true)
-    require(codes0.columns.contains("resid"),
-      "PQ index predates exact serving (no per-row resid): rerun rebuildPqIndex")
-    val codes = filtered.fold(codes0)(f =>
-      codes0.join(f.select(nodeKey.as("id")), Seq("id"), "left_semi"))
-    val m = quantMetric(meta, "index.pq")
-    val (qarr, remap) = collectQueries(queries, qIdCol, qVecCol)
-    val (gq, _, rr) = gateQueries(m, qarr, None)
-    remapQueryIds(
-      graft.vector.PqIndex.searchTopKExact(model, codes,
-        filtered.getOrElse(df), idCol, vecCol, gq, limit,
-        nodeKey = nodeKeyOpt, rerank = rr),
-      remap)
-  }
+                    limit: Int = 10, filter: String = ""): DataFrame =
+    servedCoded(Pq, queries, qIdCol, qVecCol, filter, certified = true) { c =>
+      graft.vector.PqIndex.searchTopKExact(c.pq, c.codes, c.snapshot, idCol,
+        vecCol, c.gq, limit, nodeKey = nodeKeyOpt, rerank = c.rr)
+    }
 
   /** EXACT L2 radius search served from the PQ codes — the
     * [[searchIvfSqRadius]] row-level certificate on the flat (cell-less)
@@ -3548,28 +3362,11 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * since resid shipped (rebuild refreshes). */
   def searchPqRadius(queries: DataFrame, qIdCol: String, qVecCol: String,
                      radius: Double, limit: Int = 10,
-                     filter: String = ""): DataFrame = {
-    val meta = describe
-    require(meta.contains("index.pq.m"), "no PQ index: run rebuildPqIndex first")
-    val model = pqModelFromMeta(meta, "index.pq", GraftCollection.pqCodebooks(coll))
-    val codes0 = liveSegRows(catalog.read(db, GraftCollection.pqCodes(coll)),
-      "id", meta.get("index.pq.base_seg").map(_.toInt).getOrElse(0),
-      surrogate = true)
-    require(codes0.columns.contains("resid"),
-      "PQ index predates radius serving (no per-row resid): rerun rebuildPqIndex")
-    val filtered = if (filter.isEmpty) None
-                   else Some(df.where(FilterParser.parse(filter)))
-    val codes = filtered.fold(codes0)(f =>
-      codes0.join(f.select(nodeKey.as("id")), Seq("id"), "left_semi"))
-    val m = quantMetric(meta, "index.pq")
-    val (qarr, remap) = collectQueries(queries, qIdCol, qVecCol)
-    val (gq, gr, rr) = gateQueries(m, qarr, Some(radius))
-    remapQueryIds(
-      graft.vector.PqIndex.searchRadius(model, codes,
-        filtered.getOrElse(df), idCol, vecCol, gq, gr, limit,
-        nodeKey = nodeKeyOpt, rerank = rr),
-      remap)
-  }
+                     filter: String = ""): DataFrame =
+    servedCoded(Pq, queries, qIdCol, qVecCol, filter, Some(radius)) { c =>
+      graft.vector.PqIndex.searchRadius(c.pq, c.codes, c.snapshot, idCol, vecCol,
+        c.gq, c.gr, limit, nodeKey = nodeKeyOpt, rerank = c.rr)
+    }
 
   /** add_index (scalar filter index, reference stub.py add_index /
     * collection.py add_index): record the field in collection meta and
@@ -3616,7 +3413,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * invalidated with it — meta and centroids must not survive. */
   private def rewriteIndexedLayout(): Unit = {
     persistSnapshot(df)
-    invalidateVectorIndex()
+    invalidate(keep = IndexFamily.textual)
   }
 
   /** rebuild_index for the fulltext surface: materialize the BM25
@@ -3626,123 +3423,50 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * then reads O(postings of the query terms), not O(corpus). */
   def rebuildFulltextIndex(textCol: String = "text"): Unit = {
     val base = mutationSeg
-    catalog.createCollectionIfNotExists(db, GraftCollection.ftPostings(coll))
-    catalog.createCollectionIfNotExists(db, GraftCollection.ftTerms(coll))
-    catalog.write(db, GraftCollection.ftPostings(coll),
+    Ft.collections(coll).foreach(catalog.createCollectionIfNotExists(db, _))
+    catalog.write(db, Ft.at(coll, "postings"),
       Bm25.rawPostings(df, idCol, textCol)
         .repartitionByRange(col("term")).sortWithinPartitions("term")
         .withColumn(GraftCollection.SegCol, lit(base)),
       partitionBy = Seq(GraftCollection.SegCol))
     // stats derive from the postings just WRITTEN — one tokenize pass
-    catalog.write(db, GraftCollection.ftTerms(coll),
+    catalog.write(db, Ft.at(coll, "terms"),
       Bm25.statsFromPostings(
-        catalog.read(db, GraftCollection.ftPostings(coll)).drop(GraftCollection.SegCol)))
+        catalog.read(db, Ft.at(coll, "postings")).drop(GraftCollection.SegCol)))
     catalog.updateMeta(db, coll, Map(
-      "index.ft.text_col" -> textCol, "index.ft.base_seg" -> base.toString))
+      "index.ft.text_col" -> textCol, Ft.baseSegKey -> base.toString))
   }
 
   /** The persisted fulltext index, if [[rebuildFulltextIndex]] ran
     * (ledger-masked when mutations appended segments). */
   private def sparseIndex: Option[Bm25.SparseIndex] =
-    if (catalog.collectionExists(db, GraftCollection.ftPostings(coll))) {
+    if (catalog.collectionExists(db, Ft.at(coll, "postings"))) {
       val led = GraftCollection.mutLedger(coll)
       Some(Bm25.SparseIndex(
-        catalog.read(db, GraftCollection.ftPostings(coll)),
-        catalog.read(db, GraftCollection.ftTerms(coll)),
+        catalog.read(db, Ft.at(coll, "postings")),
+        catalog.read(db, Ft.at(coll, "terms")),
         ledger = if (catalog.collectionExists(db, led)) Some(catalog.read(db, led)) else None,
-        baseSeg = describe.get("index.ft.base_seg").map(_.toInt).getOrElse(0)))
+        baseSeg = describe.get(Ft.baseSegKey).map(_.toInt).getOrElse(0)))
     } else None
 
-  /** Drop a family's artifact collections + meta keys. */
-  private def invalidateFamily(colls: Seq[String], keys: Seq[String]): Unit = {
-    colls.foreach(c => if (catalog.collectionExists(db, c)) catalog.dropCollection(db, c))
-    val meta = describe
-    val stale = keys.filter(meta.contains)
+  /** Drop every derived index family not in `keep`: its artifact
+    * collections and EVERY meta key under its prefix, so meta never
+    * keeps advertising a dropped index. Upsert, update and delete keep
+    * the families they maintained incrementally (segments + ledger, or
+    * the re-assigned IVF layout); truncate and fail-safe recovery keep
+    * nothing; a vector rebuild keeps the text families. Serving a stale
+    * index silently would be worse than the rebuild cost. One meta read
+    * covers all families. `index.sidecar.wanted` lies outside every
+    * prefix on purpose: it must survive the sidecar it witnesses. */
+  private def invalidate(keep: Set[IndexFamily] = Set.empty): Unit = {
+    val dropped = IndexFamily.all.filterNot(keep)
+    for (f <- dropped; c <- f.collections(coll))
+      if (catalog.collectionExists(db, c)) catalog.dropCollection(db, c)
+    if (dropped.contains(Hnsw))
+      GraftCollection.evictHnswServing(catalog.rootPath, db, coll)
+    val stale = describe.keys.filter(k => dropped.exists(f => k.startsWith(f.prefix)))
     if (stale.nonEmpty)
       catalog.updateMeta(db, coll, stale.map(_ -> (null: String)).toMap)
-  }
-
-  /** Invalidate derived indexes after a mutation. Upsert, update, and
-    * delete pass keep flags for every family they maintained
-    * incrementally (segments + ledger, or the re-assigned IVF layout);
-    * a family is dropped only when it could NOT be maintained —
-    * truncate invalidates everything. Serving a stale index silently
-    * would be worse than the rebuild cost, so any unmaintained family
-    * loses its meta too. */
-  private def invalidateDerived(keepFt: Boolean = false, keepIvf: Boolean = false,
-                                keepLsh: Boolean = false, keepMh: Boolean = false,
-                                keepSh: Boolean = false, keepPq: Boolean = false,
-                                keepIvfPq: Boolean = false,
-                                keepIvfSq: Boolean = false,
-                                keepHnsw: Boolean = false,
-                                keepBq: Boolean = false,
-                                keepSv: Boolean = false): Unit = {
-    if (!keepFt)
-      invalidateFamily(Seq(GraftCollection.ftPostings(coll), GraftCollection.ftTerms(coll)),
-        Seq("index.ft.text_col", "index.ft.base_seg"))
-    if (!keepMh)
-      invalidateFamily(Seq(GraftCollection.mhSig(coll), GraftCollection.mhBkt(coll)),
-        Seq("index.mh.text_col", "index.mh.shingle", "index.mh.perms",
-          "index.mh.seed", "index.mh.bands", "index.mh.base_seg"))
-    if (!keepSh)
-      invalidateFamily(Seq(GraftCollection.shSig(coll)),
-        Seq("index.sh.text_col", "index.sh.base_seg"))
-    if (!keepSv)
-      invalidateFamily(Seq(GraftCollection.svPostings(coll)),
-        Seq("index.sv.field", "index.sv.base_seg"))
-    invalidateVectorIndex(keepIvf, keepLsh, keepPq, keepIvfPq, keepIvfSq, keepHnsw,
-      keepBq)
-  }
-
-  /** Drop the persisted vector-index models (IVF centroids, PQ
-    * codes+codebooks, LSH buckets) and their meta — an index is gone
-    * whenever its layout or corpus is rewritten, unless the caller
-    * maintained it incrementally; meta must not keep advertising it. */
-  private def invalidateVectorIndex(keepIvf: Boolean = false,
-                                    keepLsh: Boolean = false,
-                                    keepPq: Boolean = false,
-                                    keepIvfPq: Boolean = false,
-                                    keepIvfSq: Boolean = false,
-                                    keepHnsw: Boolean = false,
-                                    keepBq: Boolean = false): Unit = {
-    if (!keepHnsw) {
-      invalidateFamily(Seq(GraftCollection.hnswGraph(coll)),
-        Seq("index.hnsw.m", "index.hnsw.efc", "index.hnsw.segments",
-          "index.hnsw.metric", "index.hnsw.dim", "index.hnsw.seed",
-          "index.hnsw.nextseg", "index.hnsw.base_seg", "index.hnsw.gen",
-          // crash markers die with the graph they describe — a stale
-          // merge_pending surviving into a REBUILT graph would make the
-          // next compaction's recovery drop live segments of the new
-          // graph (their ids collide with the old mini-segment range)
-          "index.hnsw.pending", "index.hnsw.merge_pending"))
-      GraftCollection.evictHnswServing(catalog.rootPath, db, coll)
-    }
-    if (!keepIvf)
-      invalidateFamily(Seq(GraftCollection.ivfCentroids(coll)),
-        Seq("index.ivf.nlist", "index.ivf.metric"))
-    if (!keepLsh)
-      invalidateFamily(Seq(GraftCollection.lshBuckets(coll)),
-        Seq("index.lsh.nbits", "index.lsh.bands", "index.lsh.dim",
-          "index.lsh.seed", "index.lsh.base_seg"))
-    if (!keepPq)
-      invalidateFamily(
-        Seq(GraftCollection.pqCodes(coll), GraftCollection.pqCodebooks(coll)),
-        Seq("index.pq.m", "index.pq.k", "index.pq.dim", "index.pq.base_seg"))
-    if (!keepIvfPq)
-      invalidateFamily(
-        Seq(GraftCollection.ivfPqCodes(coll), GraftCollection.ivfPqCentroids(coll),
-          GraftCollection.ivfPqCodebooks(coll), GraftCollection.ivfPqStats(coll)),
-        Seq("index.ivfpq.nlist", "index.ivfpq.m", "index.ivfpq.k",
-          "index.ivfpq.dim", "index.ivfpq.base_seg"))
-    if (!keepIvfSq)
-      invalidateFamily(
-        Seq(GraftCollection.ivfSqCodes(coll), GraftCollection.ivfSqCentroids(coll),
-          GraftCollection.ivfSqBounds(coll), GraftCollection.ivfSqStats(coll)),
-        Seq("index.ivfsq.nlist", "index.ivfsq.dim", "index.ivfsq.base_seg"))
-    if (!keepBq)
-      invalidateFamily(
-        Seq(GraftCollection.bqWords(coll), GraftCollection.bqThresholds(coll)),
-        Seq("index.bq.dim", "index.bq.metric", "index.bq.base_seg"))
   }
 
   /** fulltext_search: BM25-ranked docs containing the query terms; uses
@@ -3770,10 +3494,10 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
                            limit: Int = 10, filter: String = ""): DataFrame = {
     val meta = describe
     if (meta.get("index.sv.field").contains(fieldName) &&
-        catalog.collectionExists(db, GraftCollection.svPostings(coll))) {
+        catalog.collectionExists(db, Sv.at(coll, "postings"))) {
       val postings = liveSegRows(
-        catalog.read(db, GraftCollection.svPostings(coll)),
-        "doc_id", meta.get("index.sv.base_seg").map(_.toInt).getOrElse(0))
+        catalog.read(db, Sv.at(coll, "postings")),
+        "doc_id", meta.get(Sv.baseSegKey).map(_.toInt).getOrElse(0))
       graft.sparse.SparseSearch.dotTopKIndexed(postings, data, limit,
         docFilter = if (filter.isEmpty) None
           else Some(df.where(FilterParser.parse(filter))
@@ -3795,14 +3519,14 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
   def rebuildSparseVectorIndex(fieldName: String = "sparse_vector"): Unit = {
     require(df.columns.contains(fieldName), s"no such field: $fieldName")
     val baseSeg = mutationSeg
-    catalog.createCollectionIfNotExists(db, GraftCollection.svPostings(coll))
-    catalog.write(db, GraftCollection.svPostings(coll),
+    catalog.createCollectionIfNotExists(db, Sv.at(coll, "postings"))
+    catalog.write(db, Sv.at(coll, "postings"),
       graft.sparse.SparseSearch.sparsePostings(df, idCol, fieldName)
         .repartition(col("term")).sortWithinPartitions("term")
         .withColumn(GraftCollection.SegCol, lit(baseSeg)),
       partitionBy = Seq(GraftCollection.SegCol))
     catalog.updateMeta(db, coll, Map(
-      "index.sv.field" -> fieldName, "index.sv.base_seg" -> baseSeg.toString))
+      "index.sv.field" -> fieldName, Sv.baseSegKey -> baseSeg.toString))
   }
 
   /** Dense arm of hybrid search: served from the collection's LIVE
@@ -3842,9 +3566,9 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     val live = liveIndexes(meta)
     require(ef.isEmpty || nprobe.isEmpty,
       "ef tunes HNSW and nprobe tunes IVF — pass the param of the live index")
-    require(ef.isEmpty || live.hnswLive,
+    require(ef.isEmpty || live(Hnsw),
       "hybrid ef search param requires a live HNSW index")
-    require(nprobe.isEmpty || live.ivfLive,
+    require(nprobe.isEmpty || live(Ivf),
       "hybrid nprobe search param requires a live IVF index")
     // the reference serves hybrid from the collection's CONFIGURED
     // index with that index's search params AND metric — each arm
@@ -3858,7 +3582,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
       search(queries, qIdCol, qVecCol,
         meta.getOrElse("index.ivf.metric", "l2"), fetch,
         filter = filter, nprobe = nprobe)
-    else if (live.hnswLive) {
+    else if (live(Hnsw)) {
       // a FILTERED arm with NO explicit ef routes through the adaptive
       // path (cost-routed FLAT under selective filters, beam
       // escalation otherwise) — the fixed default beam's post-filter
@@ -4041,7 +3765,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     val meta = describe
     val live = liveIndexes(meta)
     val keptCell =
-      if (live.anySeg) {
+      if (live.exists(_.segmented)) {
         val doomed = doomedRows
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
@@ -4052,23 +3776,20 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
           failSafe {
             if (anyDoomed) {
               val seg = mutationSeg + 1
-              if (live.ftLive)
+              if (live(Ft))
                 appendFulltextSegment(doomed, seg, meta("index.ft.text_col"), add = false)
               advanceLedger(doomed, seg)
             }
-            persistSnapshotKeepingCell(survivors, live.ivfLive)
+            persistSnapshotKeepingCell(survivors, live(Ivf))
           }
         } finally doomed.unpersist()
-      } else failSafe { persistSnapshotKeepingCell(survivors, live.ivfLive) }
+      } else failSafe { persistSnapshotKeepingCell(survivors, live(Ivf)) }
     // HNSW keeps serving across deletes at ZERO maintenance cost: the
     // search's exact rerank joins candidates against the CURRENT data
     // snapshot, so doomed ids drop out; stale graph nodes are waypoints
     // only, folded away by the next compaction
-    invalidateDerived(keepFt = live.ftLive, keepIvf = keptCell, keepLsh = live.lshLive,
-      keepMh = live.mhLive, keepSh = live.shLive, keepPq = live.pqLive,
-      keepIvfPq = live.ivfPqLive, keepIvfSq = live.ivfSqLive,
-      keepHnsw = live.hnswLive, keepBq = live.bqLive, keepSv = live.svLive)
-    if (live.anySeg) maybeAutoCompact()
+    invalidate(keep = if (keptCell) live else live - Ivf)
+    if (live.exists(_.segmented)) maybeAutoCompact()
   }
 
   /** The update projection maps stored columns only — a `set` key that
@@ -4114,7 +3835,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     val meta = describe
     val live = liveIndexes(meta)
     val keptCell =
-      if (live.anySeg) {
+      if (live.exists(_.segmented)) {
         // the WHOLE post-image snapshot is persisted and both the index
         // batch and the data write read the SAME cached evaluation — a
         // nondeterministic set-expression must not index one value and
@@ -4135,21 +3856,18 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
             val anyMatched = !batch.isEmpty
             failSafe {
               if (anyMatched) appendLiveSegments(batch, meta, live)
-              persistSnapshotKeepingCell(snap, live.ivfLive)
+              persistSnapshotKeepingCell(snap, live(Ivf))
             }
           } finally batch.unpersist()
         } finally snap.unpersist()
-      } else failSafe { persistSnapshotKeepingCell(updatedSnapshot, live.ivfLive) }
-    invalidateDerived(keepFt = live.ftLive, keepIvf = keptCell, keepLsh = live.lshLive,
-      keepMh = live.mhLive, keepSh = live.shLive, keepPq = live.pqLive,
-      keepIvfPq = live.ivfPqLive, keepIvfSq = live.ivfSqLive,
-      keepHnsw = live.hnswLive, keepBq = live.bqLive, keepSv = live.svLive)
-    if (live.anySeg) maybeAutoCompact()
+      } else failSafe { persistSnapshotKeepingCell(updatedSnapshot, live(Ivf)) }
+    invalidate(keep = if (keptCell) live else live - Ivf)
+    if (live.exists(_.segmented)) maybeAutoCompact()
   }
 
   def truncate(): Unit = {
     catalog.truncateCollection(db, coll)
-    invalidateDerived()
+    invalidate()
   }
 }
 
@@ -4160,7 +3878,7 @@ object GraftCollection {
     new java.util.concurrent.ConcurrentHashMap[String, (String, org.apache.spark.sql.DataFrame)]()
 
   private[api] def servingKey(root: String, db: String, coll: String): String =
-    s"$db/${hnswGraph(coll)}@$root"
+    s"$db/${Hnsw.at(coll, "graph")}@$root"
 
   /** Non-repeating artifact-generation nonce (a cache token, not data
     * — determinism of results never depends on it): counters repeat
@@ -4233,39 +3951,10 @@ object GraftCollection {
   private[graft] def autoEf(n: Long, segments: Int): Int =
     autoEfSeg(math.ceil(math.max(n, 0L).toDouble / math.max(segments, 1)).toLong)
   private[api] def mutLedger(coll: String): String = coll + "__mut_ledger"
-  private[api] def mhSig(coll: String): String = coll + "__mh_sig"
-  private[api] def mhBkt(coll: String): String = coll + "__mh_bkt"
-  private[api] def shSig(coll: String): String = coll + "__sh_sig"
-  private[api] def ftPostings(coll: String): String = coll + "__ft_postings"
-  private[api] def ftTerms(coll: String): String = coll + "__ft_terms"
-  private[api] def ivfCentroids(coll: String): String = coll + "__ivf_centroids"
   private[api] def w2vVocab(coll: String): String = coll + "__w2v_vocab"
-  private[api] def pqCodes(coll: String): String = coll + "__pq_codes"
-  private[api] def pqCodebooks(coll: String): String = coll + "__pq_codebooks"
-  private[api] def ivfPqCodes(coll: String): String = coll + "__ivfpq_codes"
-  private[api] def ivfPqCentroids(coll: String): String = coll + "__ivfpq_centroids"
-  private[api] def ivfPqCodebooks(coll: String): String = coll + "__ivfpq_codebooks"
-  private[api] def ivfPqStats(coll: String): String = coll + "__ivfpq_stats"
   private[api] def qcWeights(coll: String): String = coll + "__qc_weights"
   private[api] def lmBigrams(coll: String): String = coll + "__lm_bigrams"
   private[api] def dsirRatios(coll: String): String = coll + "__dsir_ratios"
-  private[api] def ivfSqCodes(coll: String): String = coll + "__ivfsq_codes"
-  private[api] def ivfSqCentroids(coll: String): String = coll + "__ivfsq_centroids"
-  private[api] def ivfSqBounds(coll: String): String = coll + "__ivfsq_bounds"
-  private[api] def ivfSqStats(coll: String): String = coll + "__ivfsq_stats"
-  private[api] def lshBuckets(coll: String): String = coll + "__lsh_buckets"
-  private[api] def hnswGraph(coll: String): String = coll + "__hnsw_graph"
-  private[api] def bqWords(coll: String): String = coll + "__bq_words"
-  private[api] def bqThresholds(coll: String): String = coll + "__bq_thresholds"
-  private[api] def svPostings(coll: String): String = coll + "__sv_postings"
-
-  /** Meta keys recording each segment-maintained family's base segment
-    * — the compaction policy measures debt against the OLDEST one. */
-  private[api] val baseSegKeys: Seq[String] = Seq(
-    "index.ft.base_seg", "index.lsh.base_seg", "index.mh.base_seg",
-    "index.sh.base_seg", "index.pq.base_seg", "index.ivfpq.base_seg",
-    "index.ivfsq.base_seg", "index.hnsw.base_seg", "index.bq.base_seg",
-    "index.sv.base_seg")
 
   /** Default auto-compaction threshold (segments past the oldest base
     * before [[GraftCollection.compactIndexes]] fires): high enough that

@@ -125,15 +125,14 @@ object Dedup {
   val AllPairsGuardBytes: BigInt = BigInt(32L * 1024 * 1024)
 
   /** Largest near-dup edge set the connected-components driver fast
-    * path may collect. The collected representation is Array[(Long,
-    * Long)] via the tuple encoder: ~56 B/edge real driver footprint
-    * (two boxed longs at 16 B each + the Tuple2 header + array slot),
-    * NOT the 16 B/edge of the raw payload — so 1M edges ≈ 56 MB
+    * path may collect. The collected representation is an Array[Row]
+    * of two boxed ids: SizeEstimator measures ~100 B/edge for long ids
+    * and ~165 B/edge for short string ids (a 200k-edge sample), NOT
+    * the 16 B/edge of a raw long payload — so 1M edges ≈ 100–165 MB
     * transient plus the collect buffers, safe on a default 4 GB
     * production driver (the r14 bound of 4M edges assumed raw-payload
-    * accounting and could spike to several hundred MB). The count is
-    * already materialized for partition sizing, so the gate is free.
-    * Above it the distributed min-label loop runs. */
+    * accounting and could spike to several hundred MB). Above it the
+    * distributed min-label loop runs. */
   val DriverCcMaxEdges: Long = 1024 * 1024
 
   /** The exhaustive all-pairs scan — the ORACLE PROBE for the LSH
@@ -303,10 +302,13 @@ object Dedup {
 
   /** Connected components over near-dup pairs: assigns every involved
     * doc the smallest doc_id of its component (the canonical survivor).
-    * Min-label propagation to fixpoint — each iteration is one join +
-    * one min-aggregate, the standard scalable CC shape (components from
-    * dedup are tiny, so convergence is 1–2 rounds; diameter bounds the
-    * worst case). */
+    * Works for any orderable id type (the reference keys documents by
+    * string). Small edge sets run union-find on the driver; larger ones
+    * (or id types without a driver ordering that agrees with Spark's)
+    * run min-label propagation to fixpoint — each iteration is one
+    * join + one min-aggregate, the standard scalable CC shape
+    * (components from dedup are tiny, so convergence is 1–2 rounds;
+    * diameter bounds the worst case). */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 20,
                           numPartitions: Option[Int] = None,
@@ -314,31 +316,50 @@ object Dedup {
     val edgesPlain = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .unionAll(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct()
-    // SMALL-graph fast path (long ids): near-dup edge sets are usually
-    // tiny (hundreds of pairs on the test corpora), but the distributed
-    // fixpoint pays 2+ scheduled jobs PER ROUND (checkpoint + label-sum
-    // witness) — ~1.8s of pure job latency for a 144-edge graph. Under
-    // the bound a single bounded collect (the calibrateNprobe /
-    // MMR-pool discipline: size-gated, loud, with the distributed loop
-    // as the at-scale fallback) runs union-find on the driver and
-    // returns a local relation the callers broadcast anyway. Min-label
-    // semantics identical: every node maps to its component's smallest
-    // id. ONE job decides the gate AND fetches the edges: limit(bound
-    // + 1).collect() — a full count + checkpoint + collect ladder paid
-    // 3 scheduled jobs for the same information (r14's shape). When
-    // the sample overflows, its (arbitrary) rows are discarded and the
-    // distributed path recomputes from the plain plan.
-    val longIds = edgesPlain.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    if (longIds && driverMaxEdges > 0) {
-      val sample = edgesPlain.limit(driverMaxEdges.toInt + 1)
-        .as(org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong))
-        .collect() // tuple-encoder collect: ~56 B/edge on the driver
-      if (sample.length <= driverMaxEdges) {
-        val parent = new java.util.HashMap[Long, Long]()
-        def find(x: Long): Long = {
+    driverComponents(edgesPlain, driverMaxEdges)
+      .getOrElse(distributedComponents(edgesPlain, maxIter, numPartitions))
+  }
+
+  /** Driver ordering of external id values that agrees with Spark's
+    * `min` on `dt`: strings compare as UTF-8 bytes (Spark's binary
+    * collation, not Java's UTF-16 `compareTo`), the other listed types
+    * by their natural order. `None` (floating point, binary, nested)
+    * leaves the type to the distributed loop. */
+  private def driverOrdering(dt: org.apache.spark.sql.types.DataType): Option[Ordering[Any]] = {
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    dt match {
+      case StringType => Some(Ordering.by((v: Any) => UTF8String.fromString(v.asInstanceOf[String])))
+      case ByteType | ShortType | IntegerType | LongType | BooleanType | DateType |
+           TimestampType | TimestampNTZType | _: DecimalType =>
+        Some((a: Any, b: Any) => a.asInstanceOf[Comparable[Any]].compareTo(b))
+      case _ => None
+    }
+  }
+
+  /** SMALL-graph fast path: near-dup edge sets are usually tiny
+    * (hundreds of pairs on the test corpora), but the distributed
+    * fixpoint pays 2+ scheduled jobs PER ROUND (checkpoint +
+    * convergence check) — ~1.8s of pure job latency for a 144-edge
+    * graph. Under the bound a single bounded collect (the
+    * calibrateNprobe / MMR-pool discipline: size-gated, loud, with the
+    * distributed loop as the at-scale fallback) runs union-find on the
+    * driver and returns a local relation the callers broadcast anyway.
+    * Min-label semantics identical: every node maps to its component's
+    * smallest id. ONE job decides the gate AND fetches the edges:
+    * limit(bound + 1).collect() — a full count + checkpoint + collect
+    * ladder paid 3 scheduled jobs for the same information (r14's
+    * shape). `None` when the sample overflows (its arbitrary rows are
+    * discarded and the distributed path recomputes from the plain
+    * plan) or the id type has no driver ordering. */
+  private def driverComponents(edges: DataFrame, bound: Long): Option[DataFrame] = {
+    val idType = edges.schema("src").dataType
+    driverOrdering(idType).filter(_ => bound > 0).flatMap { ord =>
+      val sample = edges.limit(bound.toInt + 1).collect()
+      if (sample.length > bound) None
+      else {
+        val parent = new java.util.HashMap[Any, Any]()
+        def find(x: Any): Any = {
           var r = x
           while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
           var c = x
@@ -347,26 +368,33 @@ object Dedup {
           }
           r
         }
-        val nodes = new java.util.LinkedHashSet[Long]()
-        sample.foreach { case (a, b) =>
+        val nodes = new java.util.LinkedHashSet[Any]()
+        sample.foreach { e =>
+          val (a, b) = (e.get(0), e.get(1))
           nodes.add(a); nodes.add(b)
           val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
+          if (ra != rb) parent.put(ord.max(ra, rb), ord.min(ra, rb))
         }
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        nodes.forEach(id => out += ((id, find(id))))
-        import pairs.sparkSession.implicits._
-        return out.toSeq.toDF("doc_id", "cluster_id")
+        val out = new java.util.ArrayList[org.apache.spark.sql.Row]()
+        nodes.forEach(id => out.add(org.apache.spark.sql.Row(id, find(id))))
+        import org.apache.spark.sql.types.{StructField, StructType}
+        Some(edges.sparkSession.createDataFrame(out, StructType(Seq(
+          StructField("doc_id", idType, nullable = false),
+          StructField("cluster_id", idType, nullable = false)))))
       }
     }
-    // distributed fixpoint: localCheckpoint (eager) resets the plan to
-    // a leaf (caching alone keeps the join-of-joins lineage growing per
-    // iteration; on a cluster: reliable checkpoint dir instead). The
-    // edge set is orders of magnitude smaller than the corpus — shrink
-    // its partitioning so each propagation round is a handful of
-    // tasks; width derives from the MEASURED edge count (~1M edges per
-    // task), so a laptop edge set is one task and a 100 TB corpus's
-    // pair list still spreads — not a local[32] hardcode.
+  }
+
+  /** Distributed min-label fixpoint: localCheckpoint (eager) resets the
+    * plan to a leaf (caching alone keeps the join-of-joins lineage
+    * growing per iteration; on a cluster: reliable checkpoint dir
+    * instead). The edge set is orders of magnitude smaller than the
+    * corpus — shrink its partitioning so each propagation round is a
+    * handful of tasks; width derives from the MEASURED edge count (~1M
+    * edges per task), so a laptop edge set is one task and a 100 TB
+    * corpus's pair list still spreads — not a local[32] hardcode. */
+  private def distributedComponents(edgesPlain: DataFrame, maxIter: Int,
+                                    numPartitions: Option[Int]): DataFrame = {
     val edges0 = edgesPlain.localCheckpoint(true)
     val edgeCount = edges0.count()
     val parts = numPartitions.getOrElse(
@@ -376,24 +404,21 @@ object Dedup {
       else edges0
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id")).localCheckpoint(true)
-    // labels are monotonically non-increasing, so the label sum is a
-    // cheap convergence witness (one agg vs a join-diff per round)
-    def labelSum(df: DataFrame): Long = {
-      val row = df.agg(sum("label")).head()
-      if (row.isNullAt(0)) 0L else row.getLong(0) // empty graph: sum is NULL
-    }
-    var prevSum = labelSum(labels)
+    val noLabel = lit(null).cast(edges.schema("src").dataType)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
       val prop = edges.join(labels.withColumnRenamed("id", "src"), "src")
         .select(col("dst").as("id"), col("label"))
-      val next = labels.unionAll(prop).groupBy("id").agg(min("label").as("label"))
+      // each id carries its previous label next to the new minimum, so
+      // a round converged exactly when no label dropped — an exact test
+      // for any orderable id type, in the aggregate the round runs anyway
+      val next = labels.withColumn("prev", col("label"))
+        .unionAll(prop.withColumn("prev", noLabel))
+        .groupBy("id").agg(min("label").as("label"), max("prev").as("prev"))
         .localCheckpoint(true)
-      val s = labelSum(next)
-      converged = s == prevSum
-      prevSum = s
-      labels = next
+      converged = next.where(col("label") < col("prev")).isEmpty
+      labels = next.drop("prev")
       iter += 1
     }
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))

@@ -61,6 +61,8 @@ class IndexLifecycleSpec extends SparkSpec {
     coll.rebuildLshIndex(nBits = 16, bands = 4)
     val m2 = coll.describe
     assert(!m2.contains("index.ivfsq.nlist"), "IVF_SQ8 meta must clear on family flip")
+    assert(!m2.keys.exists(_.startsWith("index.ivfsq.")),
+      s"every IVF_SQ8 key must clear on family flip: ${m2.keys.filter(_.startsWith("index.ivfsq."))}")
     assert(!db.listCollections().contains("v__ivfsq_codes"))
     intercept[IllegalArgumentException] {
       coll.searchIvfSq(queries, "qid", "qv", limit = 5)
@@ -87,10 +89,24 @@ class IndexLifecycleSpec extends SparkSpec {
       .select("query_id", "id").collect().map(r => (r.getLong(0), r.get(1).toString)).toSet
     assert(hnswHits == exact)
 
+    // --- certificate sidecar next to the graph, then opted out: the
+    // sidecar's keys go, the graph's stay ---
+    val graphMeta = coll.describe.filter(_._1.startsWith("index.hnsw."))
+    coll.buildCertificateSidecar(nlist = 4)
+    assert(coll.describe.contains("index.ivfsq.nlist"))
+    coll.dropCertificateSidecar()
+    val md = coll.describe
+    assert(!md.keys.exists(_.startsWith("index.ivfsq.")),
+      s"dropCertificateSidecar must clear every IVF_SQ8 key: ${md.keys.filter(_.startsWith("index.ivfsq."))}")
+    assert(md.filter(_._1.startsWith("index.hnsw.")) == graphMeta,
+      "dropCertificateSidecar must leave the HNSW meta alone")
+
     // --- flip back to IVF: HNSW cleared, IVF serves again ---
     coll.rebuildIndex(nlist = 4)
     val m3 = coll.describe
     assert(!m3.contains("index.hnsw.m"), "HNSW meta must clear on family flip")
+    assert(!m3.keys.exists(_.startsWith("index.hnsw.")),
+      s"every HNSW key must clear on family flip: ${m3.keys.filter(_.startsWith("index.hnsw."))}")
     assert(!db.listCollections().contains("v__hnsw_graph"))
     intercept[IllegalArgumentException] {
       coll.searchHnsw(queries, "qid", "qv", limit = 5)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
@@ -278,16 +279,22 @@ class ConnectedComponentsSpec extends SparkSpec {
   test("distributed fallback above the driver gate matches the union-find labels") {
     // driverMaxEdges = 0 forces the distributed min-label loop on a
     // graph the driver path would otherwise take — labels must agree
-    // exactly (min id per component, chains + pair + cross-links)
-    val pairs = (Seq((1L, 2L), (2L, 3L), (3L, 7L), (10L, 11L)) ++
+    // exactly (min id per component, chains + pair + cross-links), for
+    // long ids and for the reference's string ids (where "10" < "7")
+    val longs = (Seq((1L, 2L), (2L, 3L), (3L, 7L), (10L, 11L)) ++
       (20L until 40L).map(i => (i, i + 1))).toDF("id_a", "id_b")
-    val fast = graft.dedup.Dedup.connectedComponents(pairs, "id_a", "id_b")
-      .orderBy("doc_id").as[(Long, Long)].collect().toSeq
-    val dist = graft.dedup.Dedup.connectedComponents(pairs, "id_a", "id_b",
-        driverMaxEdges = 0L)
-      .orderBy("doc_id").as[(Long, Long)].collect().toSeq
-    assert(dist == fast)
-    assert(fast.contains((7L, 1L)) && fast.contains((40L, 20L)))
+    val strings = longs.select(col("id_a").cast("string").as("id_a"),
+      col("id_b").cast("string").as("id_b"))
+    Seq[(DataFrame, Long => Any)](longs -> (i => i), strings -> (i => i.toString))
+      .foreach { case (pairs, key) =>
+        val fast = graft.dedup.Dedup.connectedComponents(pairs, "id_a", "id_b")
+          .orderBy("doc_id").collect().toSeq
+        val dist = graft.dedup.Dedup.connectedComponents(pairs, "id_a", "id_b",
+            driverMaxEdges = 0L)
+          .orderBy("doc_id").collect().toSeq
+        assert(dist == fast)
+        assert(fast.contains(Row(key(7L), key(1L))) && fast.contains(Row(key(40L), key(20L))))
+      }
   }
 
   test("softDedupWeights: 1e6/|cluster| for members, 1e6 for loners") {
